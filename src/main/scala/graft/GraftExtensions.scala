@@ -17,6 +17,11 @@ import graft.functions._
   * }}}
   *
   * Also usable via spark.sql.extensions=graft.GraftExtensions on submit.
+  * Such a deployment should also pass
+  * `spark.sql.codegen.cache.maxEntries=1024` on submit (see
+  * [[GraftSession.CodegenCacheMaxEntries]]): it is a static conf, which an
+  * extension cannot set, and Spark's default of 100 makes repeated
+  * queries recompile their generated classes.
   * No optimizer rules or strategies are injected: SURVEY.md §4.2 found none
   * needed — every operator composes from built-ins whose plans Catalyst
   * already optimizes.

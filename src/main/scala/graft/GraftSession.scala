@@ -10,6 +10,30 @@ import org.apache.spark.sql.SparkSession
   * AQE coalesces small post-shuffle partitions either way).
   */
 object GraftSession {
+
+  /** Bound on Spark's JVM-wide cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). Spark's default
+    * is smaller than one batch working set: the six perfbench batch-llm
+    * queries generate about 210 distinct classes, so with 100 entries
+    * every warm pass evicts and recompiles about 90 of them (about 1 s of
+    * a 3.5 s pass on 4 cores). With 1024 nothing of that mix is evicted.
+    *
+    * Why a bound at all, and why this one:
+    *  - one pass over all 329 queries generates 5133 classes, and on a
+    *    second pass 721 of them come out different (mostly the k-family
+    *    streaming replays), so no cap fits "everything" for long;
+    *  - a live stream compiles about 0.7 new classes per second in steady
+    *    state, so an unbounded cache would grow for the life of a stream;
+    *  - each cached class costs about 30 KB of metaspace, so 1024 entries
+    *    hold the cost near 30 MB.
+    *
+    * Static conf: Spark reads it once, when `CodeGenerator` is first
+    * initialised, so it only takes effect in a JVM whose first session is
+    * built here. Deployments that install only [[GraftExtensions]] must
+    * pass it on submit.
+    */
+  val CodegenCacheMaxEntries: Long = 1024
+
   def create(appName: String = "graft",
       cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       : SparkSession = {
@@ -25,6 +49,7 @@ object GraftSession {
       // unreadable without this flag (Tables.load converts the long back
       // to microsecond TIMESTAMP_NTZ); inert on microsecond fixtures.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries)
     // Experiment lever (probe/bench A-B runs, never set in production or
     // CI): SPARK_GRAFT_CONF="key=value;key=value" applies arbitrary Spark
     // confs at session build. Default (unset) changes nothing.

@@ -35,11 +35,22 @@ object SparkEntry {
     queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    groups.map(_._1).reduce(_ ++ _)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    merged(groups.map(_._1))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    groups.map(_._2).reduce(_ ++ _)
+  val oracleSql: Map[String, String] = merged(groups.map(_._2))
+
+  /** Union of the per-group maps; a name defined in two groups fails here
+    * instead of one definition silently shadowing the other. */
+  private[graft] def merged[V](maps: Seq[Map[String, V]]): Map[String, V] = {
+    val all = maps.reduce(_ ++ _)
+    require(all.size == maps.map(_.size).sum, {
+      val dups = maps.flatMap(_.keys).groupBy(identity)
+        .collect { case (k, ks) if ks.size > 1 => k }.toSeq.sorted
+      s"duplicate query names across groups: ${dups.mkString(", ")}"
+    })
+    all
+  }
 }

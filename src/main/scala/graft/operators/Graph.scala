@@ -481,6 +481,9 @@ object Graph {
       parsed
     }.getOrElse(inputBytes > thresholdBytes)
 
+  /** Widest seed set [[kHopCountsBitset]] runs as bitsets: 64 words. */
+  val MaxBitsetSeeds = 4096
+
   /** [[kHopCounts]] with the per-seed reach sets held as BITMASK COLUMNS
     * instead of (seed, node) rows — identical output, one decision per
     * bit (optimization-guide §8: decide with small rows).
@@ -499,9 +502,10 @@ object Graph {
     * read off the new bits (set-bit explode of V rows, not E). State is
     * V×⌈S/64⌉ longs — 64× smaller than the row form's pair set, and
     * every shuffle is node-sized. The seed set is collected to the
-    * driver to assign bit positions (bounded: it is the caller's probe
-    * set, the same boundedness as the hot-key seed collects; it also
-    * fixes the column COUNT, which must be known at plan time).
+    * driver to assign bit positions (bounded before it runs: at most
+    * [[MaxBitsetSeeds]] + 1 seeds come back, and one past the guard
+    * sends the call to the row form; it also fixes the column COUNT,
+    * which must be known at plan time).
     *
     * Output is bit-identical to [[kHopCounts]] — exact BFS both ways,
     * same (seed, dist, n_nodes) rows, n_nodes > 0 only, seed not
@@ -519,7 +523,8 @@ object Graph {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = edges.sparkSession
     val seedArr: Array[Long] = seeds.select(col("seed").cast("long"))
-      .distinct().orderBy(col("seed")).collect().map(_.getLong(0))
+      .distinct().orderBy(col("seed")).limit(MaxBitsetSeeds + 1)
+      .collect().map(_.getLong(0))
     val outSchema = StructType(Seq(
       StructField("seed", LongType, nullable = false),
       StructField("dist", IntegerType, nullable = false),
@@ -527,13 +532,13 @@ object Graph {
     if (seedArr.isEmpty)
       return spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema)
-    // width guard: past ~4096 seeds the mask spans > 64 word COLUMNS and
+    // width guard: past MaxBitsetSeeds the mask spans > 64 word COLUMNS and
     // wide-row codegen degrades (method-size splits, per-row copy cost
     // grows with the full width even for sparse masks) — the row form is
     // the right shape when the probe set itself is huge. Identical
     // output either way; the fallback's defensive distinct is the price
     // of its public contract.
-    if (seedArr.length > 4096)
+    if (seedArr.length > MaxBitsetSeeds)
       return kHopCounts(edges, seeds, k)
         .select(col("seed").cast("long").as("seed"), col("dist"),
           col("n_nodes"))

@@ -382,9 +382,11 @@ object KafkaSource {
 
   /** Decode stage demonstrating errors-as-data downstream of the scan: rows
     * whose payload fails JSON decoding get error=<reason> instead of failing
-    * the query (the reference's model, cpp:189-197). PERMISSIVE from_json
-    * never yields a null struct, so malformed input is detected via a
-    * corrupt-record field appended to the schema.
+    * the query (the reference's model, cpp:189-197). Such a row's value
+    * becomes NULL so it keeps `value IS NULL XOR error IS NULL`; the raw
+    * payload survives in the error text. PERMISSIVE from_json never yields
+    * a null struct, so malformed input is detected via a corrupt-record
+    * field appended to the schema.
     */
   def withJsonDecoded(records: DataFrame, jsonSchema: StructType,
       decodedCol: String = "decoded"): DataFrame = {
@@ -393,15 +395,16 @@ object KafkaSource {
       StructField(corrupt, StringType))
     val parsed = from_json(col("value"), augmented,
       Map("columnNameOfCorruptRecord" -> corrupt, "mode" -> "PERMISSIVE"))
+    val undecodable = col("error").isNull && col("value").isNotNull &&
+      col("__p").getField(corrupt).isNotNull
     records.withColumn("__p", parsed)
-      .withColumn("error",
-        when(col("error").isNotNull, col("error"))
-          .when(col("value").isNotNull &&
-              col("__p").getField(corrupt).isNotNull,
-            concat(lit("json decode error: "), col("value")))
-          .otherwise(lit(null).cast("string")))
+      .withColumn("__bad", undecodable)
+      .withColumn("error", when(col("__bad"),
+        concat(lit("json decode error: "), col("value")))
+        .otherwise(col("error")))
+      .withColumn("value", when(!col("__bad"), col("value")))
       .withColumn(decodedCol,
         when(col("__p").getField(corrupt).isNull, col("__p").dropFields(corrupt)))
-      .drop("__p")
+      .drop("__p", "__bad")
   }
 }

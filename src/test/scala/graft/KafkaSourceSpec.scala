@@ -114,8 +114,12 @@ class KafkaSourceSpec extends SparkSpec {
       StructType(Seq(StructField("k", IntegerType))))
     val byOffset = dec.orderBy("offset").collect()
     assert(byOffset(0).getAs[String]("error") === null)
-    assert(byOffset(1).getAs[String]("error").startsWith("json decode error"))
+    // the undecodable row keeps its payload only in the error text
+    assert(byOffset(1).getAs[String]("error") === "json decode error: not-json")
     assert(byOffset(2).getAs[String]("error") === "upstream error")
+    // every row keeps value IS NULL XOR error IS NULL
+    assert(byOffset.forall(r => r.isNullAt(r.fieldIndex("value")) !=
+      r.isNullAt(r.fieldIndex("error"))))
     // decode never drops rows (errors-as-data)
     assert(dec.count() === 3)
   }

@@ -12,6 +12,12 @@ class QueriesSpec extends SparkSpec {
     assert(extra.isEmpty, s"oracle entries without queries: $extra")
   }
 
+  test("a query name defined in two groups fails the merge, naming it") {
+    val e = intercept[IllegalArgumentException](SparkEntry.merged(Seq(
+      Map("a" -> 1, "dup" -> 2), Map("b" -> 3), Map("dup" -> 4))))
+    assert(e.getMessage.contains("duplicate query names across groups: dup"))
+  }
+
   test("every query runs at sf0.001") {
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
