@@ -187,15 +187,7 @@ object Bench {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] streaming measurement failed: $e")
           -1.0
-      } finally {
-        try {
-          import scala.jdk.CollectionConverters._
-          scala.util.Using.resource(java.nio.file.Files.walk(cpDir)) { st =>
-            st.iterator().asScala.toSeq
-              .sortBy(-_.getNameCount).foreach(java.nio.file.Files.delete)
-          }
-        } catch { case scala.util.control.NonFatal(_) => () }
-      }
+      } finally queries.Shared.deleteTree(cpDir)
     }
     val streamingRate: Double = streamingSamples.max
 

@@ -1,12 +1,11 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.Graph
+import graft.streaming.StreamOps
 
 /** Round-14 additions (VERDICT r13): streaming ingest-dedup under the
   * oracle gate (k32, item 1 — `dropDuplicatesWithinWatermark` with
@@ -86,40 +85,16 @@ object Extras10 {
     */
   private[graft] def streamingDedupReplay(s: SparkSession, dir: String)
       : (DataFrame, Long, Long, Long) = {
-    val out = Files.createTempDirectory("graft-k32-out")
-    val cp = Files.createTempDirectory("graft-k32-cp")
-    try {
-      val src = k32Slices(s, dir)
-      val glob = s"$src/e*.parquet"
-      val stream = s.readStream.schema(s.read.parquet(glob).schema)
-        .option("maxFilesPerTrigger", 1).parquet(glob)
-      // scale-adaptive state partitioning — see
-      // StreamOps.adaptiveStatePartitions
-      val q = graft.streaming.StreamOps.withStatePartitions(s,
-          graft.streaming.StreamOps.pathBytes(src)) {
-        graft.streaming.StreamOps.dedupWithinWatermark(
-            stream, Seq("event_id"), timeCol = "ts", lateness = "24 hours")
-          .writeStream.format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", cp.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      val progress = q.recentProgress
-      val dataBatches = progress.count(_.numInputRows > 0).toLong
-      val dropped = progress.flatMap(_.stateOperators)
-        .map(_.numRowsDroppedByWatermark).sum
-      val removed = progress.flatMap(_.stateOperators)
-        .map(_.numRowsRemoved).sum
-      // a re-emitted duplicate shares its key's event_id; ts breaks the
-      // tie deterministically (the injected copies shift event time)
-      val res = s.read.parquet(out.toString)
-        .orderBy(col("event_id"), col("ts")).localCheckpoint()
-      (res, dataBatches, dropped, removed)
-    } finally {
-      Shared.deleteTree(out); Shared.deleteTree(cp)
+    val src = k32Slices(s, dir)
+    // a re-emitted duplicate shares its key's event_id; ts breaks the
+    // tie deterministically (the injected copies shift event time)
+    val run = StreamOps.runReplay(s, Seq(src),
+        Seq(col("event_id"), col("ts"))) {
+      StreamOps.dedupWithinWatermark(StreamOps.fileReplay(s, src),
+        Seq("event_id"), timeCol = "ts", lateness = "24 hours")
     }
+    (run.result, run.dataBatches, run.droppedByWatermark,
+      run.stateRowsRemoved)
   }
 
   /** k33 core: the k20 replay's interval join feeding a tumbling-window
@@ -142,50 +117,26 @@ object Extras10 {
     */
   private[graft] def chainedAttributionReplay(s: SparkSession, dir: String)
       : (DataFrame, Long, Int) = {
-    val out = Files.createTempDirectory("graft-k33-out")
-    val cp = Files.createTempDirectory("graft-k33-cp")
-    try {
-      val sliceRoot = Extras6.k20SliceRoot(s, dir)
-      def fileStream(sub: String): DataFrame = {
-        val glob = s"$sliceRoot/$sub/e*.parquet"
-        s.readStream.schema(s.read.parquet(glob).schema)
-          .option("maxFilesPerTrigger", 1).parquet(glob)
-      }
-      val left = fileStream("l").select(col("user_id"),
-        col("event_id").as("view_id"), col("ts").as("view_ts"))
-      val right = fileStream("r").select(col("user_id").as("buyer_id"),
-        col("event_id").as("buy_id"), col("ts").as("buy_ts"))
-      val joined = graft.streaming.StreamOps.intervalJoin(left, right,
-        "user_id", "buyer_id", "view_ts", "buy_ts",
-        within = "48 hours", lateness = "24 hours")
-      val agg = joined
+    val sliceRoot = Extras6.k20SliceRoot(s, dir)
+    val left = StreamOps.fileReplay(s, sliceRoot.resolve("l"))
+      .select(col("user_id"), col("event_id").as("view_id"),
+        col("ts").as("view_ts"))
+    val right = StreamOps.fileReplay(s, sliceRoot.resolve("r"))
+      .select(col("user_id").as("buyer_id"), col("event_id").as("buy_id"),
+        col("ts").as("buy_ts"))
+    val joined = StreamOps.intervalJoin(left, right,
+      "user_id", "buyer_id", "view_ts", "buy_ts",
+      within = "48 hours", lateness = "24 hours")
+    val run = StreamOps.runReplay(s, Seq(sliceRoot),
+        Seq(col("win_start"), col("cohort"))) {
+      joined
         .groupBy(window(col("view_ts"), "1 day").as("win"),
           (col("user_id") % 10).as("cohort"))
         .agg(count(lit(1)).as("n_pairs"), max(col("buy_id")).as("max_buy"))
         .select(col("win.start").as("win_start"), col("cohort"),
           col("n_pairs"), col("max_buy"))
-      // scale-adaptive state partitioning (both stateful operators —
-      // the join and the windowed aggregate — share the count); see
-      // StreamOps.adaptiveStatePartitions
-      val q = graft.streaming.StreamOps.withStatePartitions(s,
-          graft.streaming.StreamOps.pathBytes(sliceRoot)) {
-        agg.writeStream.format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", cp.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      val progress = q.recentProgress
-      val dataBatches = progress.count(_.numInputRows > 0).toLong
-      val maxStateOps =
-        if (progress.isEmpty) 0 else progress.map(_.stateOperators.length).max
-      val res = s.read.parquet(out.toString)
-        .orderBy(col("win_start"), col("cohort")).localCheckpoint()
-      (res, dataBatches, maxStateOps)
-    } finally {
-      Shared.deleteTree(out); Shared.deleteTree(cp)
     }
+    (run.result, run.dataBatches, run.maxStateOperators)
   }
 
   /** k34 core: the k20 replay with the SIDES SWAPPED — purchases as the
@@ -202,42 +153,22 @@ object Extras10 {
     */
   private[graft] def mirrorOuterReplay(s: SparkSession, dir: String)
       : DataFrame = {
-    val out = Files.createTempDirectory("graft-k34-out")
-    val cp = Files.createTempDirectory("graft-k34-cp")
-    try {
-      val sliceRoot = Extras6.k20SliceRoot(s, dir)
-      def fileStream(sub: String): DataFrame = {
-        val glob = s"$sliceRoot/$sub/e*.parquet"
-        s.readStream.schema(s.read.parquet(glob).schema)
-          .option("maxFilesPerTrigger", 1).parquet(glob)
-      }
-      val buys = fileStream("r").select(col("user_id").as("buyer_id"),
-        col("event_id").as("buy_id"), col("ts").as("buy_ts"))
-      val views = fileStream("l").select(col("user_id"),
-        col("event_id").as("view_id"), col("ts").as("view_ts"))
-      val j = graft.streaming.StreamOps.intervalJoinRightAnchor(
+    val sliceRoot = Extras6.k20SliceRoot(s, dir)
+    val buys = StreamOps.fileReplay(s, sliceRoot.resolve("r"))
+      .select(col("user_id").as("buyer_id"), col("event_id").as("buy_id"),
+        col("ts").as("buy_ts"))
+    val views = StreamOps.fileReplay(s, sliceRoot.resolve("l"))
+      .select(col("user_id"), col("event_id").as("view_id"),
+        col("ts").as("view_ts"))
+    StreamOps.runReplay(s, Seq(sliceRoot),
+        Seq(col("view_id"), col("buy_id"))) {
+      StreamOps.intervalJoinRightAnchor(
           buys, views, "buyer_id", "user_id", "buy_ts", "view_ts",
           within = "48 hours", lateness = "24 hours",
           joinType = "right_outer")
         .select(col("user_id"), col("view_id"), col("buy_id"),
           col("view_ts"), col("buy_ts"))
-      // scale-adaptive state partitioning — see
-      // StreamOps.adaptiveStatePartitions
-      val q = graft.streaming.StreamOps.withStatePartitions(s,
-          graft.streaming.StreamOps.pathBytes(sliceRoot)) {
-        j.writeStream.format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", cp.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      val res = s.read.parquet(out.toString)
-        .orderBy(col("view_id"), col("buy_id")).localCheckpoint()
-      res
-    } finally {
-      Shared.deleteTree(out); Shared.deleteTree(cp)
-    }
+    }.result
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(

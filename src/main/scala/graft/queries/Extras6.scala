@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
 import graft.operators.Graph
+import graft.streaming.StreamOps
 
 /** Round-10 additions: the two remaining spec-only streaming operators
   * brought under the CORRECTNESS gate (stream-stream interval join k20,
@@ -73,20 +74,6 @@ object Extras6 {
     Files.setLastModifiedTime(dest, FileTime.fromMillis(baseMs + k * 10000L))
   }
 
-  /** k20 core: the events stream split by type into a `view` stream and a
-    * `purchase` stream, each quartile-sliced into 4 files (every 19th
-    * event two batches late), joined stream-to-stream on user_id with the
-    * event-time bound `view_ts <= buy_ts < view_ts + 48h` under 24h
-    * watermarks on BOTH sides ([[graft.streaming.StreamOps.intervalJoin]])
-    * through MicroBatchExecution. Dual watermarks make BOTH join states
-    * GC-able: left rows evict once the (min-of-both-sides) watermark
-    * passes view_ts + 48h, right rows once it passes buy_ts — the
-    * condition's time range is what bounds unbounded-stream state.
-    *
-    * Returns (result, dataBatches, rowsDroppedByWatermark,
-    * stateRowsRemoved) so the spec can assert the multi-batch, late-drop
-    * and state-GC facts the CORRECTNESS row alone cannot show.
-    */
   /** The eight k20-family replay slices (2 sides × 4 quartiles), built
     * ONCE per (session, fixture dir) via [[Shared.memoDir]] and shared by
     * k20/k24/k26 and every same-session re-run (VERDICT r11 item 4) —
@@ -143,76 +130,57 @@ object Extras6 {
       } finally Shared.deleteTree(tmp)
     }
 
+  /** k20 core: the events stream split by type into a `view` stream and a
+    * `purchase` stream, each quartile-sliced into 4 files (every 19th
+    * event two batches late), joined stream-to-stream on user_id with the
+    * event-time bound `view_ts <= buy_ts < view_ts + 48h` under 24h
+    * watermarks on BOTH sides ([[graft.streaming.StreamOps.intervalJoin]])
+    * through MicroBatchExecution. Dual watermarks make BOTH join states
+    * GC-able: left rows evict once the (min-of-both-sides) watermark
+    * passes view_ts + 48h, right rows once it passes buy_ts — the
+    * condition's time range is what bounds unbounded-stream state.
+    *
+    * Returns (result, dataBatches, rowsDroppedByWatermark,
+    * stateRowsRemoved) so the spec can assert the multi-batch, late-drop
+    * and state-GC facts the CORRECTNESS row alone cannot show.
+    */
   private[graft] def intervalJoinReplay(s: SparkSession, dir: String,
       salts: Int = 0, hotKeys: Seq[Long] = Nil,
       joinType: String = "inner"): (DataFrame, Long, Long, Long) = {
-    val out = Files.createTempDirectory("graft-k20-out")
-    val cp = Files.createTempDirectory("graft-k20-cp")
-    try {
-      val sliceRoot = k20SliceRoot(s, dir)
-      val lsrc = sliceRoot.resolve("l")
-      val rsrc = sliceRoot.resolve("r")
-      def fileStream(src: Path): DataFrame = {
-        val glob = s"$src/e*.parquet"
-        s.readStream.schema(s.read.parquet(glob).schema)
-          .option("maxFilesPerTrigger", 1).parquet(glob)
-      }
-      val left = fileStream(lsrc).select(col("user_id"),
-        col("event_id").as("view_id"), col("ts").as("view_ts"))
-      val right = fileStream(rsrc).select(col("user_id").as("buyer_id"),
-        col("event_id").as("buy_id"), col("ts").as("buy_ts"))
-      // salts > 0 routes through the skew-hardened twin (k24): identical
-      // output contract, state keys split across `salts` partitions.
-      // hotKeys non-empty routes through the hot-key-only twin (k26):
-      // same output contract again, but only the listed keys are salted.
-      val j = (if (hotKeys.nonEmpty)
-          graft.streaming.StreamOps.intervalJoinSaltedHot(left, right,
-            "user_id", "buyer_id", "view_ts", "buy_ts", hotKeys,
-            within = "48 hours", lateness = "24 hours",
-            salts = math.max(salts, 1))
-        else if (salts > 0)
-          graft.streaming.StreamOps.intervalJoinSalted(left, right,
-            "user_id", "buyer_id", "view_ts", "buy_ts",
-            within = "48 hours", lateness = "24 hours", salts = salts)
-        else graft.streaming.StreamOps.intervalJoin(left, right,
-          "user_id", "buyer_id", "view_ts", "buy_ts",
+    val sliceRoot = k20SliceRoot(s, dir)
+    val left = StreamOps.fileReplay(s, sliceRoot.resolve("l"))
+      .select(col("user_id"), col("event_id").as("view_id"),
+        col("ts").as("view_ts"))
+    val right = StreamOps.fileReplay(s, sliceRoot.resolve("r"))
+      .select(col("user_id").as("buyer_id"), col("event_id").as("buy_id"),
+        col("ts").as("buy_ts"))
+    // salts > 0 routes through the skew-hardened twin (k24): identical
+    // output contract, state keys split across `salts` partitions.
+    // hotKeys non-empty routes through the hot-key-only twin (k26):
+    // same output contract again, but only the listed keys are salted.
+    val j = (if (hotKeys.nonEmpty)
+        StreamOps.intervalJoinSaltedHot(left, right,
+          "user_id", "buyer_id", "view_ts", "buy_ts", hotKeys,
           within = "48 hours", lateness = "24 hours",
-          joinType = joinType))
-        // a semi join emits only the left side's columns
-        .select((if (joinType == "left_semi")
-            Seq(col("user_id"), col("view_id"), col("view_ts"))
-          else Seq(col("user_id"), col("view_id"), col("buy_id"),
-            col("view_ts"), col("buy_ts"))): _*)
-      // scale-adaptive state partitioning (optimization-guide §2): the
-      // join's 4 state stores × shuffle-partitions each pay a fixed
-      // per-batch commit cost, so the partition count follows the input
-      // size instead of the session constant — measured 26.5 s → 4.9 s
-      // on the warm sf0.1 replay (see adaptiveStatePartitions scaladoc).
-      val q = graft.streaming.StreamOps.withStatePartitions(s,
-          graft.streaming.StreamOps.pathBytes(lsrc) +
-          graft.streaming.StreamOps.pathBytes(rsrc)) {
-        j.writeStream.format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", cp.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      val progress = q.recentProgress
-      val dataBatches = progress.count(_.numInputRows > 0).toLong
-      val dropped = progress.flatMap(_.stateOperators)
-        .map(_.numRowsDroppedByWatermark).sum
-      val removed = progress.flatMap(_.stateOperators)
-        .map(_.numRowsRemoved).sum
-      val res = s.read.parquet(out.toString)
-        .orderBy(col("view_id") +: (if (joinType == "left_semi") Nil
-          else Seq(col("buy_id"))): _*)
-        .localCheckpoint()
-      (res, dataBatches, dropped, removed)
-    } finally {
-      // slice dirs are cache-owned (memoDir) — only per-run state dies
-      Shared.deleteTree(out); Shared.deleteTree(cp)
-    }
+          salts = math.max(salts, 1))
+      else if (salts > 0)
+        StreamOps.intervalJoinSalted(left, right,
+          "user_id", "buyer_id", "view_ts", "buy_ts",
+          within = "48 hours", lateness = "24 hours", salts = salts)
+      else StreamOps.intervalJoin(left, right,
+        "user_id", "buyer_id", "view_ts", "buy_ts",
+        within = "48 hours", lateness = "24 hours",
+        joinType = joinType))
+      // a semi join emits only the left side's columns
+      .select((if (joinType == "left_semi")
+          Seq(col("user_id"), col("view_id"), col("view_ts"))
+        else Seq(col("user_id"), col("view_id"), col("buy_id"),
+          col("view_ts"), col("buy_ts"))): _*)
+    val run = StreamOps.runReplay(s, Seq(sliceRoot),
+      col("view_id") +: (if (joinType == "left_semi") Nil
+        else Seq(col("buy_id"))))(j)
+    (run.result, run.dataBatches, run.droppedByWatermark,
+      run.stateRowsRemoved)
   }
 
   /** k21 core: all events quartile-sliced IN ORDER (no late injection —
@@ -231,41 +199,19 @@ object Extras6 {
     */
   private[graft] def sessionReplay(s: SparkSession, dir: String)
       : (DataFrame, Long, Long) = {
-    val out = Files.createTempDirectory("graft-k21-out")
-    val cp = Files.createTempDirectory("graft-k21-cp")
-    try {
-      val src = sliceRoot4(s, dir, "k21-slices", {
-        val ev = t(s, dir, "events").select(col("event_id"),
-          date_trunc("millisecond", col("ts")).as("ts"), col("user_id"))
-        withFidx(ev, late = false)
-          .select(col("ts"), col("user_id"), col("fidx"))
-      })
-      val glob = s"$src/e*.parquet"
-      val stream = s.readStream.schema(s.read.parquet(glob).schema)
-        .option("maxFilesPerTrigger", 1).parquet(glob)
-      // scale-adaptive state partitioning — see intervalJoinReplay
-      val q = graft.streaming.StreamOps.withStatePartitions(s,
-          graft.streaming.StreamOps.pathBytes(src)) {
-        graft.streaming.StreamOps.sessionCounts(stream,
-            keyCol = "user_id", timeCol = "ts", gap = "12 hours",
-            lateness = "1 hour")
-          .writeStream.format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", cp.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      val progress = q.recentProgress
-      val dataBatches = progress.count(_.numInputRows > 0).toLong
-      val removed = progress.flatMap(_.stateOperators)
-        .map(_.numRowsRemoved).sum
-      val res = s.read.parquet(out.toString)
-        .orderBy(col("user_id"), col("session_start")).localCheckpoint()
-      (res, dataBatches, removed)
-    } finally {
-      Shared.deleteTree(out); Shared.deleteTree(cp)
+    val src = sliceRoot4(s, dir, "k21-slices", {
+      val ev = t(s, dir, "events").select(col("event_id"),
+        date_trunc("millisecond", col("ts")).as("ts"), col("user_id"))
+      withFidx(ev, late = false)
+        .select(col("ts"), col("user_id"), col("fidx"))
+    })
+    val run = StreamOps.runReplay(s, Seq(src),
+        Seq(col("user_id"), col("session_start"))) {
+      StreamOps.sessionCounts(StreamOps.fileReplay(s, src),
+        keyCol = "user_id", timeCol = "ts", gap = "12 hours",
+        lateness = "1 hour")
     }
+    (run.result, run.dataBatches, run.stateRowsRemoved)
   }
 
   /** k22 core: exactly-once delivery to an idempotent sink DEMONSTRATED,
@@ -295,24 +241,17 @@ object Extras6 {
           col("user_id"), col("event_type"), col("value"))
         withFidx(ev, late = false).drop("mn", "mx")
       })
-      val glob = s"$src/e*.parquet"
       val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
       val marker = "graft-k22-injected-crash"
       def runOnce(): Boolean = {
-        val stream = s.readStream.schema(s.read.parquet(glob).schema)
-          .option("maxFilesPerTrigger", 1).parquet(glob)
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            batch.write.mode("overwrite")
-              .parquet(s"$out/batch_id=$batchId")
-            // Fail AFTER the write, BEFORE the offset commit — the
-            // window where at-least-once delivery duplicates.
-            if (batchId == 2 && crashed.compareAndSet(false, true))
-              throw new RuntimeException(marker)
-          }
-          .option("checkpointLocation", cp.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
+        val q = graft.sinks.Sinks.foreachBatchSink(
+            StreamOps.fileReplay(s, src), cp.toString) { (batch, batchId) =>
+          batch.write.mode("overwrite").parquet(s"$out/batch_id=$batchId")
+          // Fail AFTER the write, BEFORE the offset commit — the
+          // window where at-least-once delivery duplicates.
+          if (batchId == 2 && crashed.compareAndSet(false, true))
+            throw new RuntimeException(marker)
+        }
         try { q.awaitTermination(); false }
         catch {
           case e: org.apache.spark.sql.streaming.StreamingQueryException

@@ -1,12 +1,11 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.Graph
+import graft.streaming.{StreamOps, UserEvent, UserTimedEvent}
 
 /** Round-11 additions (VERDICT r10): the INT-register twin of the g20
   * reach sketch (g21, item 2 — the documented lever against the sf3
@@ -19,29 +18,6 @@ object Extras7 {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
-
-  /** RocksDB-engagement fallback read straight off the query handle
-    * (ADVICE r11): the StreamingQueryListener delivers progress events
-    * async on the shared listener bus, so a still-queued last event could
-    * leave `rocksSeen` false after awaitTermination(). `lastProgress` is
-    * written synchronously by the progress reporter at batch completion
-    * (not via the bus), so it is read FIRST — that alone closes the race.
-    * `recentProgress` (a ring buffer bounded by
-    * spark.sql.streaming.numRecentProgressUpdates, default 100 — far
-    * above these 4-5 batch replays) is kept as a second signal for a
-    * last batch that happened to carry no state metrics (ADVICE r12:
-    * the body previously read only the ring buffer, contradicting this
-    * scaladoc).
-    */
-  private[graft] def rocksInLastProgress(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Boolean = {
-    import scala.jdk.CollectionConverters._
-    def hasRocks(p: org.apache.spark.sql.streaming.StreamingQueryProgress) =
-      p.stateOperators.exists(_.customMetrics.keySet().asScala
-        .exists(_.toLowerCase.contains("rocksdb")))
-    Option(q.lastProgress).exists(hasRocks) ||
-      q.recentProgress.exists(hasRocks)
-  }
 
   /** The k23 replay's 4-file quartile slicing of the events table
     * (user_id, event_id, epoch-micros event time, value — IN ORDER, no
@@ -79,66 +55,20 @@ object Extras7 {
     */
   private[graft] def twsStatsReplay(s: SparkSession, dir: String)
       : (DataFrame, Long, Boolean) = {
-    val out = Files.createTempDirectory("graft-k23-out")
-    val cp = Files.createTempDirectory("graft-k23-cp")
-    val prevProvider = s.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    val rocksSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryProgressEvent): Unit =
-        e.progress.stateOperators.foreach(_.customMetrics.keySet()
-          .forEach(k => if (k.toLowerCase.contains("rocksdb"))
-            rocksSeen.set(true)))
-      override def onQueryTerminated(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    import s.implicits._
+    val src = k23Slices(s, dir)
+    val run = StreamOps.runReplay(s, Seq(src),
+        Seq(col("user_id"), col("n_cum")), rocksDb = true) {
+      StreamOps.userStatsTws(StreamOps.fileReplay(s, src)
+          .select(col("user_id").as("userId"), col("event_id").as("eventId"),
+            col("ts_us").as("tsUs"), col("value"))
+          .as[UserEvent])
+        .toDF("user_id", "n_cum", "sum_cum_dec", "last_ts_us")
+        .select(col("user_id"), col("n_cum"),
+          col("sum_cum_dec").cast("double").as("sum_cum"),
+          col("last_ts_us"))
     }
-    try {
-      val src = k23Slices(s, dir)
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      s.streams.addListener(listener)
-      val glob = s"$src/e*.parquet"
-      import s.implicits._
-      val stream = s.readStream.schema(s.read.parquet(glob).schema)
-        .option("maxFilesPerTrigger", 1).parquet(glob)
-        .select(col("user_id").as("userId"), col("event_id").as("eventId"),
-          col("ts_us").as("tsUs"), col("value"))
-        .as[graft.streaming.UserEvent]
-      // scale-adaptive state partitioning — see
-      // StreamOps.adaptiveStatePartitions (per-store fixed commit cost;
-      // RocksDB pays it as one DB instance per state partition)
-      val q = graft.streaming.StreamOps.withStatePartitions(s,
-          graft.streaming.StreamOps.pathBytes(src)) {
-        graft.streaming.StreamOps.userStatsTws(stream)
-          .toDF("user_id", "n_cum", "sum_cum_dec", "last_ts_us")
-          .select(col("user_id"), col("n_cum"),
-            col("sum_cum_dec").cast("double").as("sum_cum"),
-            col("last_ts_us"))
-          .writeStream.format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", cp.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0).toLong
-      val res = s.read.parquet(out.toString)
-        .orderBy(col("user_id"), col("n_cum")).localCheckpoint()
-      (res, dataBatches, rocksSeen.get || rocksInLastProgress(q))
-    } finally {
-      s.streams.removeListener(listener)
-      prevProvider match {
-        case Some(p) => s.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-      Shared.deleteTree(out); Shared.deleteTree(cp)
-    }
+    (run.result, run.dataBatches, run.rocksDbEngaged)
   }
 
   /** k25 core: event-time TIMERS through transformWithState (the last
@@ -157,68 +87,24 @@ object Extras7 {
     */
   private[graft] def twsTimerReplay(s: SparkSession, dir: String)
       : (DataFrame, Long, Boolean) = {
-    val out = Files.createTempDirectory("graft-k25-out")
-    val cp = Files.createTempDirectory("graft-k25-cp")
-    val prevProvider = s.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    val rocksSeen = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryProgressEvent): Unit =
-        e.progress.stateOperators.foreach(_.customMetrics.keySet()
-          .forEach(k => if (k.toLowerCase.contains("rocksdb"))
-            rocksSeen.set(true)))
-      override def onQueryTerminated(e: org.apache.spark.sql.streaming
-          .StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    import s.implicits._
+    val src = Extras6.sliceRoot4(s, dir, "k25-slices", {
+      // ms-truncated LTZ event time — the watermark's native grid
+      val ev = t(s, dir, "events").select(col("event_id"),
+        date_trunc("millisecond", col("ts")).as("ts"), col("user_id"))
+      Extras6.withFidx(ev, late = false)
+        .select(col("user_id"), col("event_id"), col("ts"), col("fidx"))
+    })
+    val run = StreamOps.runReplay(s, Seq(src), Seq(col("user_id")),
+        rocksDb = true) {
+      StreamOps.firstSeenAlerts(StreamOps.fileReplay(s, src)
+          .select(col("user_id").as("userId"), col("event_id").as("eventId"),
+            col("ts"))
+          .withWatermark("ts", "1 hour")
+          .as[UserTimedEvent])
+        .toDF("user_id", "alert_ts_ms")
     }
-    try {
-      val src = Extras6.sliceRoot4(s, dir, "k25-slices", {
-        // ms-truncated LTZ event time — the watermark's native grid
-        val ev = t(s, dir, "events").select(col("event_id"),
-          date_trunc("millisecond", col("ts")).as("ts"), col("user_id"))
-        Extras6.withFidx(ev, late = false)
-          .select(col("user_id"), col("event_id"), col("ts"), col("fidx"))
-      })
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      s.streams.addListener(listener)
-      val glob = s"$src/e*.parquet"
-      import s.implicits._
-      val stream = s.readStream.schema(s.read.parquet(glob).schema)
-        .option("maxFilesPerTrigger", 1).parquet(glob)
-        .select(col("user_id").as("userId"), col("event_id").as("eventId"),
-          col("ts"))
-        .withWatermark("ts", "1 hour")
-        .as[graft.streaming.UserTimedEvent]
-      // scale-adaptive state partitioning — see k23's site above
-      val q = graft.streaming.StreamOps.withStatePartitions(s,
-          graft.streaming.StreamOps.pathBytes(src)) {
-        graft.streaming.StreamOps.firstSeenAlerts(stream)
-          .toDF("user_id", "alert_ts_ms")
-          .writeStream.format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", cp.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0).toLong
-      val res = s.read.parquet(out.toString)
-        .orderBy(col("user_id")).localCheckpoint()
-      (res, dataBatches, rocksSeen.get || rocksInLastProgress(q))
-    } finally {
-      s.streams.removeListener(listener)
-      prevProvider match {
-        case Some(p) => s.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-      Shared.deleteTree(out); Shared.deleteTree(cp)
-    }
+    (run.result, run.dataBatches, run.rocksDbEngaged)
   }
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(

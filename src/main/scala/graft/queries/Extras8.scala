@@ -1,11 +1,10 @@
 package graft.queries
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.streaming.{StreamOps, TypedUserEvent}
 
 /** Round-12 additions (VERDICT r11): the HOT-KEY-ONLY salted
   * stream-stream interval join (k26, item 1 — the production shape of
@@ -37,60 +36,24 @@ object Extras8 {
     */
   private[graft] def typeCountsReplay(s: SparkSession, dir: String)
       : (DataFrame, Long, Boolean) = {
-    val out = Files.createTempDirectory("graft-k27-out")
-    val cp = Files.createTempDirectory("graft-k27-cp")
-    val prevProvider = s.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    try {
-      val src = Extras6.sliceRoot4(s, dir, "k27-slices", {
-        val ev = t(s, dir, "events").select(col("event_id"), col("ts"),
-          col("user_id"), col("event_type"))
-        Extras6.withFidx(ev, late = false)
-          .select(col("user_id"), col("event_id"), col("event_type"),
-            col("fidx"))
-      })
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      val glob = s"$src/e*.parquet"
-      import s.implicits._
-      val stream = s.readStream.schema(s.read.parquet(glob).schema)
-        .option("maxFilesPerTrigger", 1).parquet(glob)
-        .select(col("user_id").as("userId"), col("event_id").as("eventId"),
-          col("event_type").as("eventType"))
-        .as[graft.streaming.TypedUserEvent]
-      // scale-adaptive state partitioning — see
-      // StreamOps.adaptiveStatePartitions
-      val q = graft.streaming.StreamOps.withStatePartitions(s,
-          graft.streaming.StreamOps.pathBytes(src)) {
-        graft.streaming.StreamOps.typeCountsTws(stream)
-          .toDF("user_id", "batch_seq", "event_type", "n_cum",
-            "max_eid_cum")
-          .writeStream.format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", cp.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0).toLong
-      import scala.jdk.CollectionConverters._
-      val rocks = q.recentProgress.flatMap(_.stateOperators)
-        .exists(_.customMetrics.keySet().asScala
-          .exists(_.toLowerCase.contains("rocksdb")))
-      val res = s.read.parquet(out.toString)
-        .orderBy(col("user_id"), col("batch_seq"), col("event_type"))
-        .localCheckpoint()
-      (res, dataBatches, rocks)
-    } finally {
-      prevProvider match {
-        case Some(p) => s.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => s.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-      Shared.deleteTree(out); Shared.deleteTree(cp)
+    import s.implicits._
+    val src = Extras6.sliceRoot4(s, dir, "k27-slices", {
+      val ev = t(s, dir, "events").select(col("event_id"), col("ts"),
+        col("user_id"), col("event_type"))
+      Extras6.withFidx(ev, late = false)
+        .select(col("user_id"), col("event_id"), col("event_type"),
+          col("fidx"))
+    })
+    val run = StreamOps.runReplay(s, Seq(src),
+        Seq(col("user_id"), col("batch_seq"), col("event_type")),
+        rocksDb = true) {
+      StreamOps.typeCountsTws(StreamOps.fileReplay(s, src)
+          .select(col("user_id").as("userId"), col("event_id").as("eventId"),
+            col("event_type").as("eventType"))
+          .as[TypedUserEvent])
+        .toDF("user_id", "batch_seq", "event_type", "n_cum", "max_eid_cum")
     }
+    (run.result, run.dataBatches, run.rocksDbEngaged)
   }
 
   /** The hot-key set for the k26 replay: a batch pre-scan of the events

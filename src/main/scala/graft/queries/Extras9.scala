@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.operators.Graph
+import graft.streaming.StreamOps
 
 /** Round-13 additions (VERDICT r12): the stream-stream LEFT OUTER
   * interval join under the oracle gate (k28, item 1 — the last
@@ -36,7 +37,7 @@ object Extras9 {
     * append-only), so the run lands through foreachBatch into
     * batchId-keyed parquet directories in overwrite mode — the k22
     * idempotence discipline, which doubles as the batch-id column the
-    * oracle needs (mtime-ordered files under maxFilesPerTrigger=1 make
+    * oracle needs (mtime-ordered files replayed one per micro-batch make
     * batch id == quartile index). In-order arrival means the oracle is
     * the k23 running window with batch_id = the quartile itself.
     *
@@ -54,16 +55,13 @@ object Extras9 {
     val cp = Files.createTempDirectory("graft-k29-cp")
     try {
       val src = Extras7.k23Slices(s, dir)
-      val glob = s"$src/e*.parquet"
-      val stream = s.readStream.schema(s.read.parquet(glob).schema)
-        .option("maxFilesPerTrigger", 1).parquet(glob)
-      val agg = stream.groupBy(col("user_id"))
+      val agg = StreamOps.fileReplay(s, src).groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_cum"),
           sum(col("value").cast(dec2)).as("sum_dec"))
-      // scale-adaptive state partitioning — see
-      // StreamOps.adaptiveStatePartitions
-      val q = graft.streaming.StreamOps.withStatePartitions(s,
-          graft.streaming.StreamOps.pathBytes(src)) {
+      // update mode cannot go through the append-only parquet sink of
+      // StreamOps.runReplay, so this replay scopes its own state
+      // partitioning
+      val q = StreamOps.withStatePartitions(s, StreamOps.pathBytes(src)) {
         agg.writeStream.outputMode("update")
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             // no '=' in the dir name: partition inference would otherwise
@@ -227,7 +225,7 @@ object Extras9 {
     // update mode emits a user's cumulative row exactly at the quartiles
     // the user appears in — so the oracle is the k23 running window with
     // batch_id = the quartile index itself (foreachBatch's batchId under
-    // maxFilesPerTrigger=1 over mtime-ordered files).
+    // one-file-per-batch replay of mtime-ordered files).
     "k29_update_mode_agg" -> """
       WITH ev AS (SELECT event_id, ts, user_id, value FROM events),
       bnds AS (SELECT min(epoch_us(ts)) AS mn, max(epoch_us(ts)) AS mx

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.Tables
 import graft.sources.KafkaSource
+import graft.streaming.StreamOps
 
 /** Parity queries for the reference's single operator: the `kafka_consumer`
   * streaming scan (reference: src/kafquack_extension.cpp:68-230), exercised
@@ -162,38 +163,16 @@ object KafkaParity {
     // Deterministic end-to-end — the rare CORRECTNESS row whose Spark
     // side is a real streaming run.
     "k18_streaming_counts" -> { (s, dir) =>
-      val out = java.nio.file.Files.createTempDirectory("graft-k18-out")
-      val cp = java.nio.file.Files.createTempDirectory("graft-k18-cp")
-      try {
-        // scale-adaptive state partitioning — see
-        // StreamOps.adaptiveStatePartitions
-        val q = graft.streaming.StreamOps.withStatePartitions(s,
-            graft.streaming.StreamOps.pathBytes(
-              java.nio.file.Paths.get(dir, "events.parquet"))) {
-          graft.streaming.StreamOps.windowedCounts(
-              graft.streaming.StreamOps.replayStream(s, dir))
-            .writeStream.format("parquet")
-            .option("path", out.toString)
-            .option("checkpointLocation", cp.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-        }
-        q.awaitTermination()
-        // localCheckpoint pins the (window-count-sized) result in session
-        // memory so the sink/checkpoint dirs can be deleted immediately —
-        // under the 3-pass bench this query used to leave six temp trees
-        // per run (ADVICE r8).
-        s.read.parquet(out.toString).orderBy(col("bucket"), col("key"))
-          .localCheckpoint()
-      } finally {
-        Shared.deleteTree(out); Shared.deleteTree(cp)
-      }
+      StreamOps.runReplay(s, Seq(java.nio.file.Paths.get(dir,
+          "events.parquet")), Seq(col("bucket"), col("key"))) {
+        StreamOps.windowedCounts(StreamOps.replayStream(s, dir))
+      }.result
     },
 
     // MULTI-micro-batch streaming under the oracle gate (VERDICT r8
     // item 1): the events replay split into four time-quartile files —
     // with every 19th offset deterministically delivered two batches
-    // late — streamed with maxFilesPerTrigger=1 under AvailableNow, so
+    // late — streamed one file per micro-batch under AvailableNow, so
     // the watermark genuinely ADVANCES batch-by-batch and late rows are
     // genuinely DROPPED by the state operator (k18's single-batch replay
     // could never exercise either). The oracle replays the same
@@ -241,14 +220,8 @@ object KafkaParity {
     */
   private[graft] def multiBatchReplay(s: SparkSession, dir: String)
       : (DataFrame, Long, Long) = {
-    import java.nio.file.Files
-    import java.nio.file.attribute.FileTime
-    val src = Files.createTempDirectory("graft-k19-src")
-    val out = Files.createTempDirectory("graft-k19-out")
-    val cp = Files.createTempDirectory("graft-k19-cp")
-    try {
+    val src = Extras6.sliceRoot4(s, dir, "k19-slices", {
       val r = KafkaSource.replay(Tables.load(s, dir, "events"))
-      val outCols = r.columns.map(col)
       // NTZ→LTZ cast is value-preserving under the UTC session, so
       // unix_micros sees the same numbers DuckDB's epoch_us does.
       val b = r.agg(
@@ -256,62 +229,15 @@ object KafkaParity {
         max(unix_micros(col("timestamp").cast("timestamp"))).as("mx"))
       val quart = "((unix_micros(cast(`timestamp` as timestamp)) - mn) " +
         "* 4) div (mx - mn + 1)"
-      val withF = r.crossJoin(broadcast(b)).withColumn("fidx",
+      r.crossJoin(broadcast(b)).select(r.columns.map(col) :+
         expr(s"CASE WHEN `offset` % 19 = 0 THEN least($quart + 2, 3) " +
-          s"ELSE $quart END"))
-      val baseMs = System.currentTimeMillis() - 3600000L
-      // ONE scan writes all four slices: repartition by fidx puts each
-      // file index in exactly one task, partitionBy(fidx) splits it into
-      // one parquet file per fidx=k/ dir (the fidx column moves to the
-      // path, so the files hold exactly the 7 replay columns). Four
-      // filtered coalesce(1) writes would re-scan the replay 4x.
-      val tmp = Files.createTempDirectory("graft-k19-slices")
-      try {
-        withF.select(outCols :+ col("fidx"): _*)
-          .repartition(4, col("fidx"))
-          .write.mode("overwrite").partitionBy("fidx").parquet(tmp.toString)
-        import scala.jdk.CollectionConverters._
-        (0 to 3).foreach { k =>
-          val dir = tmp.resolve(s"fidx=$k")
-          if (Files.isDirectory(dir)) {
-            scala.util.Using.resource(Files.list(dir)) { st =>
-              st.iterator().asScala
-                .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-            }.headOption.foreach { part =>
-              val dest = src.resolve(s"e$k.parquet")
-              Files.move(part, dest)
-              Files.setLastModifiedTime(dest,
-                FileTime.fromMillis(baseMs + k * 10000L))
-            }
-          }
-        }
-      } finally Shared.deleteTree(tmp)
-      val glob = s"$src/e*.parquet"
-      val schema = s.read.parquet(glob).schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(glob)
-      // scale-adaptive state partitioning — see
-      // StreamOps.adaptiveStatePartitions
-      val q = graft.streaming.StreamOps.withStatePartitions(s,
-          graft.streaming.StreamOps.pathBytes(src)) {
-        graft.streaming.StreamOps.windowedCounts(stream)
-          .writeStream.format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", cp.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      val progress = q.recentProgress
-      val dataBatches = progress.count(_.numInputRows > 0).toLong
-      val dropped = progress.flatMap(_.stateOperators)
-        .map(_.numRowsDroppedByWatermark).sum
-      val res = s.read.parquet(out.toString)
-        .orderBy(col("bucket"), col("key")).localCheckpoint()
-      (res, dataBatches, dropped)
-    } finally {
-      Shared.deleteTree(src); Shared.deleteTree(out); Shared.deleteTree(cp)
+          s"ELSE $quart END").as("fidx"): _*)
+    })
+    val run = StreamOps.runReplay(s, Seq(src),
+        Seq(col("bucket"), col("key"))) {
+      StreamOps.windowedCounts(StreamOps.fileReplay(s, src))
     }
+    (run.result, run.dataBatches, run.droppedByWatermark)
   }
 
   // private[queries]: Extras2's k10 lateness audit runs over the same

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Sink surface (SURVEY.md §2.2 "Sinks" row).
   *
@@ -163,10 +163,6 @@ object Sinks {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
-
-  /** Convenience: configured writer for a memory sink (tests/debug). */
-  def memorySink(records: DataFrame, name: String): DataStreamWriter[Row] =
-    records.writeStream.format("memory").queryName(name)
 
   /** Small-file compaction of ONE leaf parquet directory: rewrite it into
     * ~`targetFileMB` files (count derived from the actual on-disk bytes).

@@ -313,7 +313,6 @@ object KafkaSource {
         // same pruning semantics (partition filter ≈ assign; timestamp
         // range ≈ startingTimestamp/endingTimestamp, inclusive-exclusive
         // like the connector's offset resolution).
-        validateArgs(brokers, topic, groupId, sasl)
         kafkaOptions(brokers, topic, groupId, sasl, parts) // arg-surface parity
         val base = replay(graft.Tables.load(spark, dir, "events"), topic)
         val pruned = parts.fold(base)(ps =>
