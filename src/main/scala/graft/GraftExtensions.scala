@@ -22,6 +22,12 @@ import graft.functions._
   * [[GraftSession.CodegenCacheMaxEntries]]): it is a static conf, which an
   * extension cannot set, and Spark's default of 100 makes repeated
   * queries recompile their generated classes.
+  * It should likewise pass
+  * `spark.hadoop.fs.file.impl=graft.io.ForkFreeLocalFileSystem` and
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl=graft.io.ForkFreeLocalFs`
+  * (see [[GraftSession]]): without them, a host without `libhadoop` forks
+  * `chmod`/`readlink` for every local checkpoint and output file. HDFS and
+  * object stores are unaffected.
   * No optimizer rules or strategies are injected: SURVEY.md §4.2 found none
   * needed — every operator composes from built-ins whose plans Catalyst
   * already optimizes.

@@ -8,6 +8,22 @@ import org.apache.spark.sql.SparkSession
   * configs apply per-executor. Shuffle partitions track the core count (the
   * 100 TB deployment overrides via spark.sql.shuffle.partitions on submit;
   * AQE coalesces small post-shuffle partitions either way).
+  *
+  * `file:` is bound to [[graft.io.ForkFreeLocalFileSystem]] and, for
+  * `FileContext`, [[graft.io.ForkFreeLocalFs]] (`spark.hadoop.fs.file.impl`,
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl`). Without `libhadoop`,
+  * which stock Spark distributions and pip installs do not ship, Hadoop's
+  * local filesystem runs `chmod` as a child process for every file and
+  * directory it creates, `.crc` files included, and `readlink` on both
+  * sides of every `FileContext` rename. Every micro-batch checkpoints
+  * through those calls (offset WAL, source log, sink log, commit log,
+  * state-store deltas), as does every file-sink and parquet write, so the
+  * forks set the floor of a live query's commit. The two classes set the
+  * same bits and read links through java.nio; the sticky bit, a
+  * filesystem without POSIX attributes and real symlinks fall back to the
+  * stock code, and `.crc` files and Spark's `FileContext` checkpoint
+  * manager stay. HDFS and object stores are untouched. Deployments that
+  * install only [[GraftExtensions]] pass both confs on submit.
   */
 object GraftSession {
 
@@ -50,6 +66,10 @@ object GraftSession {
       // to microsecond TIMESTAMP_NTZ); inert on microsecond fixtures.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.io.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.io.ForkFreeLocalFs].getName)
     // Experiment lever (probe/bench A-B runs, never set in production or
     // CI): SPARK_GRAFT_CONF="key=value;key=value" applies arbitrary Spark
     // confs at session build. Default (unset) changes nothing.
