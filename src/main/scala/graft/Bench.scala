@@ -159,12 +159,13 @@ object Bench {
         // k-family replay applies — see StreamOps.adaptiveStatePartitions
         val eventsBytes = graft.streaming.StreamOps.pathBytes(
           java.nio.file.Paths.get(sfDir, "events.parquet"))
-        // pathBytes returns 0 for a missing path; surface a fixture-layout
-        // drift instead of silently benching at the partition floor
+        // a missing path sizes as unknown; surface a fixture-layout drift
+        // instead of silently benching at the session ceiling
         // (ADVICE r14).
-        if (eventsBytes == 0L) System.err.println(
-          s"[bench] WARNING: $sfDir/events.parquet is missing or empty; " +
-          "streaming throughput will run at the state-partition floor")
+        if (eventsBytes == graft.streaming.StreamOps.UnknownBytes)
+          System.err.println(
+            s"[bench] WARNING: $sfDir/events.parquet is missing; streaming " +
+            "throughput will run at the session's state-partition ceiling")
         val q = graft.streaming.StreamOps.withStatePartitions(spark,
             eventsBytes) {
           graft.streaming.StreamOps.windowedCounts(

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 
 /** Canonical session factory for the graft engine.
@@ -84,6 +85,53 @@ object GraftSession {
     }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    dropHadoopConfSources(spark)
     spark
   }
+
+  /** Drops the per-key source lists from the session's base Hadoop
+    * `Configuration`, its private `updatingResource` map.
+    *
+    * Spark serializes the Hadoop conf into every write job's task binary
+    * and into every parquet scan's broadcast. For each of its ~1.1k
+    * properties `Configuration.write` also writes the list of resources
+    * that set it, gzipped entry by entry, and `readFields` gunzips each
+    * one again: 112 KB, about 4.5 ms to write and 3.5 ms to read with
+    * the lists, against 68 KB and about 1 ms each without them (1098
+    * properties, 4-core host). Every `sessionState.newHadoopConf()`
+    * copies the base conf's map, so clearing it once shrinks every copy.
+    *
+    * Order matters. `Configuration.addDefaultResource` reloads every live
+    * conf, which fills the map again. So the classes whose static init
+    * registers default resources run first: `JobConf` and `Job`
+    * (mapred and yarn defaults; otherwise the first parquet or file-sink
+    * write runs it) and `HdfsConfiguration`. Then the base conf is loaded
+    * and the map cleared. `YarnConfiguration` registers
+    * `resource-types.xml` and would refill it too; local mode never
+    * loads it.
+    *
+    * No key or value changes. What is lost is provenance: for the keys
+    * loaded so far `getPropertySources` returns null and `writeXml`
+    * writes no `<source>`, and Hadoop's deprecation messages no longer
+    * name the resource that set a deprecated key. Keys set later record
+    * their source as before. If the field is missing or not accessible,
+    * one WARN line is logged and nothing is cleared.
+    */
+  private def dropHadoopConfSources(spark: SparkSession): Unit =
+    try {
+      Seq("org.apache.hadoop.mapred.JobConf",
+          "org.apache.hadoop.mapreduce.Job",
+          "org.apache.hadoop.hdfs.HdfsConfiguration")
+        .foreach(Class.forName(_, true, classOf[Configuration].getClassLoader))
+      val conf = spark.sparkContext.hadoopConfiguration
+      conf.size()
+      val field = classOf[Configuration].getDeclaredField("updatingResource")
+      field.setAccessible(true)
+      field.get(conf).asInstanceOf[java.util.Map[_, _]].clear()
+    } catch {
+      case e @ (_: ReflectiveOperationException | _: RuntimeException |
+          _: LinkageError) =>
+        org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          s"Hadoop conf keeps its per-key source lists: $e")
+    }
 }

@@ -468,7 +468,9 @@ object Graph {
     * caller's `deltaOnly` mode always forces them (the changed-set diff
     * re-reads each hop's table — [[reachSketch]]'s own require). Output
     * is invariant either way — the checkpoint is a lineage boundary,
-    * never a semantic. `SPARK_GRAFT_HOP_CHECKPOINT` (true/false)
+    * never a semantic. An input of unknown size
+    * ([[graft.streaming.StreamOps.UnknownBytes]]) keeps checkpoints on.
+    * `SPARK_GRAFT_HOP_CHECKPOINT` (true/false)
     * overrides for A/B experiments.
     */
   def adaptiveHopCheckpoint(inputBytes: Long,

@@ -901,8 +901,7 @@ object Similarity {
     // the probed cell set is tiny (≤ |Q|·nprobe ids) — collect it into
     // the filter LITERAL so the scan prunes partitions statically; an
     // isin against a literal list is what partition pruning understands.
-    val cells = probes.select(col("cell")).distinct()
-      .collect().map(_.getLong(0))
+    val cells = probedCells(probes, q.count() * math.max(nprobe, 0))
     val idx = spark.read.parquet(path)
       .filter(col("cell").isin(cells: _*))
     val scored = idx
@@ -917,6 +916,21 @@ object Similarity {
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
+  }
+
+  /** The distinct `cell` ids of `probes`, collected through
+    * `limit(bound + 1)` so at most one id past `bound` reaches the
+    * driver; more than `bound` ids fail loudly instead of feeding an
+    * unbounded literal list to the scan filter.
+    */
+  private[graft] def probedCells(probes: DataFrame, bound: Long)
+      : Array[Long] = {
+    val cells = probes.select(col("cell")).distinct()
+      .limit(math.min(bound + 1, Int.MaxValue.toLong).toInt)
+      .collect().map(_.getLong(0))
+    if (cells.length > bound) throw new IllegalStateException(
+      s"IVF probes hit more than $bound distinct cells (|Q|·nprobe)")
+    cells
   }
 
   /** IVF-PQ search — the composition a production ANN index actually

@@ -321,8 +321,7 @@ object Extras6 {
       Graph.reachSketch(e, seeds, k = 3, m = 64, edgesDeduped = true,
         checkpoint = Graph.adaptiveHopCheckpoint(
           graft.streaming.StreamOps.pathBytes(
-            java.nio.file.Paths.get(dir, "orders.parquet")) +
-          graft.streaming.StreamOps.pathBytes(
+            java.nio.file.Paths.get(dir, "orders.parquet"),
             java.nio.file.Paths.get(dir, "lineitem.parquet"))))
     })
 

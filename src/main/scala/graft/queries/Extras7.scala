@@ -125,8 +125,7 @@ object Extras7 {
         intRegisters = true,
         checkpoint = Graph.adaptiveHopCheckpoint(
           graft.streaming.StreamOps.pathBytes(
-            java.nio.file.Paths.get(dir, "orders.parquet")) +
-          graft.streaming.StreamOps.pathBytes(
+            java.nio.file.Paths.get(dir, "orders.parquet"),
             java.nio.file.Paths.get(dir, "lineitem.parquet"))))
     },
 

@@ -351,7 +351,8 @@ object StreamOps {
     * deployment sets it on submit (GraftSession scaladoc) and large
     * inputs saturate it, so production behavior is unchanged; only
     * inputs small enough that per-partition overhead dominates are
-    * coalesced. The floor (default 4) keeps multi-partition state
+    * coalesced. An input [[pathBytes]] cannot size ([[UnknownBytes]])
+    * gets the ceiling. The floor (default 4) keeps multi-partition state
     * semantics (cross-partition watermark min, salted-skew spread)
     * exercised even on toy inputs. Output is partition-count-invariant:
     * state partitioning is a hash layout, never a semantic.
@@ -402,18 +403,32 @@ object StreamOps {
     try body finally s.conf.set(key, prev)
   }
 
-  /** Total bytes under a path (file, or directory walked recursively) —
-    * the `inputBytes` feeder for [[withStatePartitions]] when the stream
-    * replays local files.
+  /** What [[pathBytes]] returns for an input it cannot size. As an input
+    * size it is too large to coalesce, so the adaptive choices fail safe:
+    * [[adaptiveStatePartitions]] gives the session ceiling and
+    * [[graft.operators.Graph.adaptiveHopCheckpoint]] keeps checkpoints on.
     */
-  def pathBytes(p: java.nio.file.Path): Long = {
+  val UnknownBytes: Long = Long.MaxValue
+
+  /** Total bytes under the paths (files, or directories walked
+    * recursively) — the `inputBytes` feeder for [[withStatePartitions]]
+    * and the hop-checkpoint choice when a query reads local files.
+    * [[UnknownBytes]] if any path cannot be sized: a missing path, a
+    * non-local one such as `s3a://…` (which `Paths.get` reads as a
+    * missing relative path), or a walk that fails.
+    */
+  def pathBytes(paths: Path*): Long = {
     import scala.jdk.CollectionConverters._
-    if (!java.nio.file.Files.exists(p)) 0L
-    else scala.util.Using.resource(java.nio.file.Files.walk(p)) { st =>
-      st.iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(java.nio.file.Files.size).sum
-    }
+    def bytes(p: Path): Option[Long] =
+      if (!Files.exists(p)) None
+      else try scala.util.Using.resource(Files.walk(p)) { st =>
+        Some(st.iterator().asScala.filter(Files.isRegularFile(_))
+          .map(Files.size).sum)
+      } catch {
+        case _: java.io.IOException | _: java.io.UncheckedIOException => None
+      }
+    val sizes = paths.map(bytes)
+    if (sizes.forall(_.isDefined)) sizes.flatten.sum else UnknownBytes
   }
 
   /** What one [[runReplay]] run leaves behind: the sink's rows and the
@@ -477,7 +492,7 @@ object StreamOps {
     val tmp = Files.createTempDirectory("graft-replay")
     try withRocksDb(s, rocksDb) {
       val out = tmp.resolve("out").toString
-      val q = withStatePartitions(s, inputs.map(pathBytes).sum) {
+      val q = withStatePartitions(s, pathBytes(inputs: _*)) {
         graft.sinks.Sinks.parquetSink(query, out,
           tmp.resolve("cp").toString)
       }
