@@ -5,10 +5,11 @@ import org.apache.spark.sql.SparkSession
 
 /** Canonical session factory for the graft engine.
   *
-  * Local mode is one JVM with N executor threads; on a real cluster the same
-  * configs apply per-executor. Shuffle partitions track the core count (the
-  * 100 TB deployment overrides via spark.sql.shuffle.partitions on submit;
-  * AQE coalesces small post-shuffle partitions either way).
+  * Local mode is one JVM with `cores` executor threads (`SPARK_GRAFT_CPUS`,
+  * default 32), and `spark.sql.shuffle.partitions` is that same count; AQE
+  * coalesces small post-shuffle partitions either way. A cluster session
+  * is not built here: it sets `spark.sql.shuffle.partitions` itself on
+  * submit.
   *
   * `file:` is bound to [[graft.io.ForkFreeLocalFileSystem]] and, for
   * `FileContext`, [[graft.io.ForkFreeLocalFs]] (`spark.hadoop.fs.file.impl`,
@@ -54,11 +55,10 @@ object GraftSession {
   def create(appName: String = "graft",
       cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       : SparkSession = {
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .appName(appName)
       .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cores))
+      .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -71,19 +71,7 @@ object GraftSession {
         classOf[graft.io.ForkFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[graft.io.ForkFreeLocalFs].getName)
-    // Experiment lever (probe/bench A-B runs, never set in production or
-    // CI): SPARK_GRAFT_CONF="key=value;key=value" applies arbitrary Spark
-    // confs at session build. Default (unset) changes nothing.
-    sys.env.get("SPARK_GRAFT_CONF").foreach { kvs =>
-      kvs.split(';').map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => builder.config(k, v)
-          case _ => System.err.println(
-            s"[graft] ignoring malformed SPARK_GRAFT_CONF entry '$kv'")
-        }
-      }
-    }
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     dropHadoopConfSources(spark)
     spark

@@ -470,18 +470,10 @@ object Graph {
     * is invariant either way — the checkpoint is a lineage boundary,
     * never a semantic. An input of unknown size
     * ([[graft.streaming.StreamOps.UnknownBytes]]) keeps checkpoints on.
-    * `SPARK_GRAFT_HOP_CHECKPOINT` (true/false)
-    * overrides for A/B experiments.
     */
   def adaptiveHopCheckpoint(inputBytes: Long,
       thresholdBytes: Long = 1L << 30): Boolean =
-    sys.env.get("SPARK_GRAFT_HOP_CHECKPOINT").flatMap { v =>
-      val parsed = v.toBooleanOption
-      if (parsed.isEmpty) System.err.println(
-        s"[graft] ignoring invalid SPARK_GRAFT_HOP_CHECKPOINT='$v' " +
-        "(need true/false); using the adaptive value")
-      parsed
-    }.getOrElse(inputBytes > thresholdBytes)
+    inputBytes > thresholdBytes
 
   /** Widest seed set [[kHopCountsBitset]] runs as bitsets: 64 words. */
   val MaxBitsetSeeds = 4096

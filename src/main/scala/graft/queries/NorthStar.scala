@@ -1023,8 +1023,7 @@ object NorthStar {
     // collect), then the corpus encode is one map-only scan.
     "t14_bpe_encode" -> { (s, dir) =>
       val d = docs(s, dir)
-      val merges = Shared.bpeMerges(s, dir).orderBy(col("merge_rank"))
-        .collect().map(r => (r.getString(1), r.getString(2))).toSeq
+      val merges = Shared.bpeMergePairs(Shared.bpeMerges(s, dir))
       TextAnalysis.bpeEncode(d, merges).orderBy(col("doc_id"))
     },
 
@@ -1035,8 +1034,7 @@ object NorthStar {
     // aggregation of exact integer counts.
     "t40_fertility" -> { (s, dir) =>
       val d = docs(s, dir)
-      val merges = Shared.bpeMerges(s, dir).orderBy(col("merge_rank"))
-        .collect().map(r => (r.getString(1), r.getString(2))).toSeq
+      val merges = Shared.bpeMergePairs(Shared.bpeMerges(s, dir))
       TextAnalysis.bpeEncode(d, merges)
         .join(d.select(col("doc_id"), col("lang")), "doc_id")
         .groupBy(col("lang"))

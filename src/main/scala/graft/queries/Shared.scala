@@ -218,8 +218,25 @@ private[graft] object Shared {
   def bpeMerges(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "bpe-merges") { _ =>
       graft.operators.TextAnalysis.bpeTrain(
-        Tables.load(s, dir, "documents")).localCheckpoint()
+        Tables.load(s, dir, "documents"), nMerges = BpeMergeCount)
+        .localCheckpoint()
     }
+
+  /** Merges [[bpeMerges]] trains. */
+  val BpeMergeCount = 3
+
+  /** A merge table ([[bpeMerges]]) as its (left, right) pairs in rank
+    * order, for the driver-side encoder. Collected through
+    * `limit(BpeMergeCount + 1)`: a table with more rows than the trained
+    * merges fails loudly instead of reaching the driver unbounded.
+    */
+  def bpeMergePairs(merges: DataFrame): Seq[(String, String)] = {
+    val rows = merges.orderBy(col("merge_rank"))
+      .limit(BpeMergeCount + 1).collect()
+    if (rows.length > BpeMergeCount) throw new IllegalStateException(
+      s"BPE merge table has more than $BpeMergeCount rows")
+    rows.map(r => (r.getString(1), r.getString(2))).toSeq
+  }
 
   /** The customer↔supplier interaction graph of g01/g07: symmetrized
     * DISTINCT edges of the orders⋈lineitem bipartite projection,

@@ -14,36 +14,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object Sinks {
 
-  /** Bucketed (hash-clustered) parquet TABLE write: rows are hash-split
-    * into `buckets` files per partition on `bucketCol` and sorted within
-    * each bucket, with the layout recorded in the catalog. Two tables
-    * bucketed on the same key with the same bucket count then join with
-    * ZERO exchanges (bucket-aware SortMergeJoin) — at 100 TB the shuffle
-    * this avoids is the dominant cost of every fact-fact join, and
-    * repeated joins amortize one write-time shuffle forever. SinkSpec
-    * proves the exchange-free plan.
-    */
-  def writeBucketed(df: DataFrame, table: String, path: String,
-      bucketCol: String, buckets: Int, mode: String = "overwrite"): Unit =
-    df.write.mode(mode)
-      .option("path", path)
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Batch parquet write, hash-distributed into `partitionCols` directories
-    * — the layout that lets downstream scans partition-prune. At 100 TB,
-    * choose low-cardinality columns (date, topic, cell) and let AQE size
-    * the files.
-    */
-  def writePartitioned(df: DataFrame, path: String,
-      partitionCols: Seq[String], mode: String = "overwrite"): Unit = {
-    val w = df.write.mode(mode)
-    (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-      .parquet(path)
-  }
-
   /** Range-clustered batch write: rows are range-partitioned on
     * `rangeCols` and sorted within each partition before writing, so each
     * output file covers a disjoint key range and parquet min/max stats let
@@ -58,50 +28,6 @@ object Sinks {
     df.repartitionByRange(numFiles, cols: _*)
       .sortWithinPartitions(cols: _*)
       .write.mode(mode).parquet(path)
-  }
-
-  /** Range-clustered write PLUS a zone-map manifest: per output file,
-    * row count and min/max of `statsCols`, written as a parquet sidecar
-    * at `<path>_manifest`. This is the lakehouse pruning primitive —
-    * [[readPruned]] consults the manifest and opens ONLY the files whose
-    * [min, max] overlaps the predicate, so a selective range query on a
-    * 100 TB clustered table touches a handful of files regardless of
-    * engine-side pushdown. (Parquet footers carry similar stats, but a
-    * separate manifest prunes at the FILE-LISTING level — no footer
-    * reads, which at 10⁶ files is itself the bottleneck.)
-    */
-  def writeWithManifest(df: DataFrame, path: String,
-      statsCols: Seq[String], numFiles: Int = 8): Unit = {
-    import org.apache.spark.sql.functions._
-    writeRangeClustered(df, path, statsCols, numFiles)
-    val back = df.sparkSession.read.parquet(path)
-    val aggs = count(lit(1)).as("n_rows") +: statsCols.flatMap(c =>
-      Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    back.withColumn("file", input_file_name())
-      .groupBy(col("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(path + "_manifest")
-  }
-
-  /** Manifest-pruned range read over a [[writeWithManifest]] dataset:
-    * files whose zone [min, max] misses [lo, hi] are never opened — the
-    * file list shrinks BEFORE the scan is planned. The manifest read and
-    * file-list collect are file-count-sized (driver-side by nature, like
-    * any listing); the residual filter keeps exactness when a zone
-    * straddles the bound.
-    */
-  def readPruned(spark: org.apache.spark.sql.SparkSession, path: String,
-      colName: String, lo: Any, hi: Any): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val files = spark.read.parquet(path + "_manifest")
-      .filter(col(s"max_$colName") >= lit(lo) &&
-        col(s"min_$colName") <= lit(hi))
-      .select(col("file")).collect().map(_.getString(0))
-    if (files.isEmpty)
-      return spark.read.parquet(path).filter(lit(false))
-    spark.read.parquet(files.toIndexedSeq: _*)
-      .filter(col(colName) >= lit(lo) && col(colName) <= lit(hi))
   }
 
   /** Morton (z-order) key: interleave the low `bits` bits of two

@@ -19,81 +19,6 @@ case class OffsetGap(topic: String, partition: Int,
 /** Per-(topic,partition) offset tracking state. */
 case class OffsetState(lastOffset: Long)
 
-/** [[StreamOps.detectOffsetGaps]] re-expressed on Spark 4's
-  * transformWithState API: the same bounded one-long-per-partition state,
-  * held in a typed [[ValueState]] under the RocksDB state store (the new
-  * API's required provider). Same emission contract as the
-  * flatMapGroupsWithState twin — the spec gates their parity.
-  */
-class OffsetGapProcessor
-    extends StatefulProcessor[(String, Int), KafkaRecord, OffsetGap] {
-  @transient private var last: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    last = getHandle.getValueState[Long]("lastOffset", Encoders.scalaLong,
-      TTLConfig.NONE)
-
-  override def handleInputRows(key: (String, Int),
-      rows: Iterator[KafkaRecord], tv: TimerValues): Iterator[OffsetGap] = {
-    val sorted = rows.map(_.offset).toArray.sorted
-    var l = if (last.exists()) last.get() else -1L
-    val gaps = Seq.newBuilder[OffsetGap]
-    sorted.foreach { off =>
-      if (l >= 0 && off > l + 1) gaps += OffsetGap(key._1, key._2, l, off)
-      if (off > l) l = off
-    }
-    last.update(l)
-    gaps.result().iterator
-  }
-}
-
-/** One observation entering the streaming CUSUM: `tsUs`/`eventId` give
-  * the per-key total order, `value` the measured series.
-  */
-case class CusumPoint(key: String, tsUs: Long, eventId: Long, value: Double)
-
-/** Per-row CUSUM emission: detect = runningSum − runningMin, ≥ 0. */
-case class CusumUpdate(key: String, eventId: Long, detect: BigDecimal)
-
-/** (runningSum, runningMin-including-current) — the whole CUSUM state. */
-case class CusumState(s: BigDecimal, minS: BigDecimal)
-
-/** Streaming CUSUM drift detector — the transformWithState twin of the
-  * batch q71 formulation (running sum of (value − target) minus its
-  * running minimum): two DECIMAL-exact numbers of state per key, emitted
-  * per row. The same left-to-right decimal arithmetic as the batch
-  * windows, so after replaying a key's (tsUs, eventId) order the per-key
-  * peak detect is BIT-IDENTICAL to the batch query — StreamingSpec gates
-  * it. Rows are sorted within each micro-batch; cross-batch order is the
-  * source's responsibility (Kafka per-partition order in production).
-  */
-class CusumProcessor(target: BigDecimal)
-    extends StatefulProcessor[String, CusumPoint, CusumUpdate] {
-  @transient private var st: ValueState[CusumState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[CusumState]("cusum",
-      Encoders.product[CusumState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[CusumPoint],
-      tv: TimerValues): Iterator[CusumUpdate] = {
-    var (s, minS, seen) =
-      if (st.exists()) { val c = st.get(); (c.s, c.minS, true) }
-      else (BigDecimal(0), BigDecimal(0), false)
-    val out = rows.toArray.sortBy(p => (p.tsUs, p.eventId)).map { p =>
-      // the same double→DECIMAL(·,6) conversion Spark's cast performs
-      val dev = BigDecimal(java.math.BigDecimal.valueOf(p.value))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP) - target
-      s += dev
-      minS = if (seen) minS.min(s) else s
-      seen = true
-      CusumUpdate(p.key, p.eventId, s - minS)
-    }
-    st.update(CusumState(s, minS))
-    out.iterator
-  }
-}
-
 /** One event entering the per-user running-stats processor; `tsUs` is
   * epoch-micros of the event time (kept integral so the emitted column
   * avoids NTZ/LTZ cross-engine pitfalls).
@@ -281,40 +206,6 @@ class FirstSeenAlertProcessor(gapMs: Long)
     Iterator.single(UserAlert(key, info.getExpiryTimeInMs))
 }
 
-/** Test-surface twin of [[FirstSeenAlertProcessor]] covering
-  * [[org.apache.spark.sql.streaming.StatefulProcessorHandle.listTimers]]
-  * — the one timer call k25 and the min-merge leave unexercised: on
-  * first sight it registers a timer at firstTs + g for EVERY g in
-  * `gapsMs`; on any later batch it walks `listTimers()` and deletes all
-  * but the earliest. Exactly one alert (the earliest) must survive —
-  * Round12Spec replays it.
-  */
-class TimerCullProbeProcessor(gapsMs: Seq[Long])
-    extends StatefulProcessor[Long, UserTimedEvent, UserAlert] {
-  @transient private var firstMs: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    firstMs = getHandle.getValueState[Long]("firstMs", Encoders.scalaLong,
-      TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[UserTimedEvent],
-      tv: TimerValues): Iterator[UserAlert] = {
-    if (!firstMs.exists()) {
-      val first = rows.map(_.ts.getTime).min
-      firstMs.update(first)
-      gapsMs.foreach(g => getHandle.registerTimer(first + g))
-    } else {
-      val live = getHandle.listTimers().toSeq.sorted
-      live.drop(1).foreach(getHandle.deleteTimer)
-    }
-    Iterator.empty
-  }
-
-  override def handleExpiredTimer(key: Long, tv: TimerValues,
-      info: ExpiredTimerInfo): Iterator[UserAlert] =
-    Iterator.single(UserAlert(key, info.getExpiryTimeInMs))
-}
-
 /** Structured Streaming surface (SURVEY.md §2.2 streaming rows): the
   * streaming twin of the batch replay source plus watermarked windows,
   * streaming dedup, and session windows.
@@ -359,24 +250,11 @@ object StreamOps {
     */
   def adaptiveStatePartitions(s: SparkSession, inputBytes: Long,
       targetBytesPerPartition: Long = 64L << 20,
-      minPartitions: Int = 4): Int =
-    // manual operational override (also how the before/after experiments
-    // force the pre-adaptive layout at any SF): when set to a positive
-    // int, it wins verbatim; anything else (malformed, zero, negative —
-    // e.g. an env var leaking into sbt test) is rejected loudly and the
-    // adaptive value applies, rather than starting a broken query deep
-    // inside a replay (ADVICE r14).
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").flatMap { v =>
-      val parsed = v.toIntOption.filter(_ > 0)
-      if (parsed.isEmpty) System.err.println(
-        s"[graft] ignoring invalid SPARK_GRAFT_STREAM_SHUFFLE='$v' " +
-        "(need a positive int); using the adaptive value")
-      parsed
-    }.getOrElse {
-      val ceiling = s.conf.get("spark.sql.shuffle.partitions").toInt
-      math.max(1, math.min(ceiling, math.max(minPartitions,
-        math.ceil(inputBytes.toDouble / targetBytesPerPartition).toInt)))
-    }
+      minPartitions: Int = 4): Int = {
+    val ceiling = s.conf.get("spark.sql.shuffle.partitions").toInt
+    math.max(1, math.min(ceiling, math.max(minPartitions,
+      math.ceil(inputBytes.toDouble / targetBytesPerPartition).toInt)))
+  }
 
   /** Run `body` (typically `writeStream…start(); awaitTermination()`)
     * with `spark.sql.shuffle.partitions` set to
@@ -531,10 +409,9 @@ object StreamOps {
     KafkaSource.replay(eventStream(spark, dir), topic)
 
   /** The raw events fixture as a normalized stream (ts → TIMESTAMP_NTZ
-    * micros), without the Kafka-record projection — the input shape for
-    * stream-static enrichment over the business columns.
+    * micros), without the Kafka-record projection [[replayStream]] adds.
     */
-  def eventStream(spark: SparkSession, dir: String): DataFrame = {
+  private def eventStream(spark: SparkSession, dir: String): DataFrame = {
     // The fixture is a single file, not a directory; FileStreamSource
     // insists on a directory basePath, but a glob makes it derive the
     // parent dir as the base itself.
@@ -546,23 +423,6 @@ object StreamOps {
         timestamp_micros(expr("ts div 1000")).cast(TimestampNTZType))
     else raw.withColumn("ts", col("ts").cast(TimestampNTZType))
   }
-
-  /** Stream-static anomaly gate (q92's streaming twin): each event joins
-    * its (event_type, hour-of-day) stats row — a broadcast dimension
-    * refreshed per micro-batch — and passes only if it falls outside
-    * mean ± nSigma·sd. Stateless map-side filtering: no watermark, no
-    * state store; the stats table is the (type × 24)-sized artifact the
-    * batch job publishes.
-    */
-  def anomalyFlags(events: DataFrame, stats: DataFrame,
-      nSigma: Double = 2.0): DataFrame =
-    events
-      .withColumn("hour", hour(col("ts")).cast("int"))
-      .withColumn("vd", col("value")
-        .cast(org.apache.spark.sql.types.DecimalType(18, 2)))
-      .join(broadcast(stats), Seq("event_type", "hour"))
-      .filter(abs(col("vd").cast("double") - col("mean")) >
-        col("sd") * nSigma)
 
   /** Tumbling (or, with `slide`, hopping) window counts with a watermark:
     * the canonical streaming agg. Late rows beyond `lateness` are dropped;
@@ -578,28 +438,6 @@ object StreamOps {
         window(col(timeCol), windowLen, s)).as("win"), col("key"))
       .agg(count(lit(1)).as("n"))
       .select(col("win.start").as("bucket"), col("key"), col("n"))
-
-  /** Windowed approximate distinct entities per event type: the
-    * cardinality stream (unique users per window) via HLL++ partials
-    * merged through the streaming state store — constant state per
-    * (window, type) regardless of user volume, the 100 TB-day shape.
-    * The estimator is Spark's own on both the streaming and batch
-    * paths, so the batch twin is an exact-equality gate (same sketch,
-    * same merges up to merge order — asserted in StreamingSpec).
-    */
-  def windowedDistinctUsers(events: DataFrame,
-      timeCol: String = "ts", keyCol: String = "event_type",
-      entityCol: String = "user_id", windowLen: String = "1 day",
-      lateness: String = "1 hour"): DataFrame =
-    events
-      // watermarks require TIMESTAMP; NTZ→LTZ is value-preserving under
-      // the UTC session (the Tables.load convention)
-      .withColumn(timeCol, col(timeCol).cast("timestamp"))
-      .withWatermark(timeCol, lateness)
-      .groupBy(window(col(timeCol), windowLen).as("win"), col(keyCol))
-      .agg(approx_count_distinct(col(entityCol)).as("approx_users"))
-      .select(col("win.start").as("bucket"), col(keyCol),
-        col("approx_users"))
 
   /** Streaming exact dedup bounded by the watermark — duplicate keys seen
     * within the lateness horizon are dropped; state is GC'd past it.
@@ -636,21 +474,6 @@ object StreamOps {
       }
   }
 
-  /** [[detectOffsetGaps]] on the transformWithState API (Spark 4's
-    * arbitrary-state surface — typed state cells, timers, TTL): identical
-    * semantics, state lives in a per-key [[ValueState]] long. Requires
-    * the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass` =
-    * `...state.RocksDBStateStoreProvider`) — the caller sets it; the
-    * HDFS-backed default store does not support this operator.
-    */
-  def detectOffsetGapsTws(records: Dataset[KafkaRecord]): Dataset[OffsetGap] = {
-    import records.sparkSession.implicits._
-    records.groupByKey(r => (r.topic, r.partition))
-      .transformWithState(new OffsetGapProcessor, TimeMode.None(),
-        OutputMode.Append())
-  }
-
   /** Per-user running stats over typed events (see [[UserStatsProcessor]]);
     * requires the RocksDB state store provider, like every
     * transformWithState op. `ttl` other than NONE switches the stream to
@@ -679,17 +502,6 @@ object StreamOps {
         TimeMode.EventTime(), OutputMode.Append())
   }
 
-  /** listTimers cull probe (see [[TimerCullProbeProcessor]]); test
-    * surface for Round12Spec, RocksDB + event-time watermark required.
-    */
-  def timerCullProbe(events: Dataset[UserTimedEvent],
-      gapsMs: Seq[Long]): Dataset[UserAlert] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.userId)
-      .transformWithState(new TimerCullProbeProcessor(gapsMs),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
   /** Per-user per-type running counts via MapState + ListState (see
     * [[TypeCountsProcessor]]); requires the RocksDB provider, like every
     * transformWithState op.
@@ -701,58 +513,6 @@ object StreamOps {
       .transformWithState(new TypeCountsProcessor, TimeMode.None(),
         OutputMode.Append())
   }
-
-  /** Streaming CUSUM over typed points (see [[CusumProcessor]]); requires
-    * the RocksDB state store provider, like every transformWithState op.
-    */
-  def cusumStream(points: Dataset[CusumPoint],
-      target: BigDecimal = BigDecimal(50)): Dataset[CusumUpdate] = {
-    import points.sparkSession.implicits._
-    points.groupByKey(_.key)
-      .transformWithState(new CusumProcessor(target), TimeMode.None(),
-        OutputMode.Append())
-  }
-
-  /** Stream-static enrichment join: the static dimension broadcasts to the
-    * stream side — no streaming state, no shuffle of the stream.
-    */
-  def enrich(stream: DataFrame, dim: DataFrame,
-      joinKeys: Seq[String]): DataFrame =
-    stream.join(broadcast(dim), joinKeys, "left")
-
-  /** Streaming corpus sketch: per-key union MinHash maintained across
-    * micro-batches — drives the typed [[graft.functions.MinhashUnion]]
-    * Aggregator through the streaming engine's partial-agg + state-merge
-    * path (buffer serialization included). At 100 TB/day this is the
-    * incremental dedup-index builder: the per-key state is one 16-long
-    * array regardless of volume.
-    */
-  def sketchByKey(docs: DataFrame, keyCol: String = "source",
-      textCol: String = "text"): DataFrame =
-    docs.groupBy(col(keyCol))
-      .agg(graft.functions.MinhashUnion.minhash_union()(
-        graft.functions.TextFunctions.minhash_signature(col(textCol)))
-        .as("union_sig"),
-        count(lit(1)).as("n_docs"))
-
-  /** Streaming frequent-term candidates per key: the Misra-Gries sketch
-    * ([[graft.functions.MisraGries]]) driven through the streaming
-    * state-merge path — per-key candidate sets over an unbounded stream
-    * with ≤ `capacity` entries of state per key, ever. Merge order varies
-    * across micro-batches, so counter VALUES differ from a batch fold,
-    * but the candidate-superset guarantee (every term with frequency >
-    * n/(capacity+1) is present) survives any merge tree — that is the
-    * property downstream exact-confirm passes rely on, and what the spec
-    * gates.
-    */
-  def frequentTermsByKey(docs: DataFrame, capacity: Int,
-      keyCol: String = "source", textCol: String = "text"): DataFrame =
-    docs.select(col(keyCol),
-        explode(split(col(textCol), "\\s+")).as("term"))
-      .groupBy(col(keyCol))
-      .agg(graft.functions.MisraGries.misra_gries(capacity)(col("term"))
-        .as("candidates"),
-        count(lit(1)).as("n_tokens"))
 
   /** Stream-stream interval (event-time-bounded) inner join: right rows
     * within `[left.time, left.time + within)` for the same key. Both
@@ -875,40 +635,6 @@ object StreamOps {
     val hot = typedLit(hotKeys.distinct.sorted)
     intervalJoinSaltedWhere(left, right, keyL, keyR, timeL, timeR,
       k => array_contains(hot, col(k).cast("long")),
-      within, lateness, salts)
-  }
-
-  /** [[intervalJoinSaltedHot]] for STRING (or any string-castable) keys
-    * (VERDICT r12 item 3's optional variant — the long-cast restriction
-    * removed): hot membership compares on `cast(key as string)`, so ids
-    * that don't fit a long (UUIDs, composite string keys) salt the same
-    * way. Same output-invariance argument, same lifecycle scaladoc as
-    * the long twin; Round13Spec asserts the two variants agree on a
-    * numeric-keyed fixture.
-    *
-    * ==Exact-string-form requirement (ADVICE r13)==
-    * Hot membership compares Spark's CANONICAL string rendering of the
-    * key column against the caller's literals. For a non-string key
-    * column the two can silently disagree — DECIMAL `1.00` renders as
-    * `"1.00"` not `"1"`, FLOAT/DOUBLE render with their own formatting —
-    * and a mismatched literal salts NOTHING: output stays correct (cold
-    * rows take salt 0 on both sides) but the skew collapse quietly
-    * disappears, exactly the stale-hot-set failure mode Round13Spec's
-    * drift probe measures. Pass literals in the column's canonical cast
-    * form (for integral keys, the plain digits the long twin would use);
-    * when in doubt use [[intervalJoinSaltedHot]] for integral keys or a
-    * genuinely StringType key column here.
-    */
-  def intervalJoinSaltedHotStr(left: DataFrame, right: DataFrame,
-      keyL: String, keyR: String, timeL: String, timeR: String,
-      hotKeys: Seq[String],
-      within: String = "10 minutes", lateness: String = "10 minutes",
-      salts: Int = 8): DataFrame = {
-    require(hotKeys.nonEmpty,
-      "hotKeys must be non-empty (use intervalJoin when nothing is hot)")
-    val hot = typedLit(hotKeys.distinct.sorted)
-    intervalJoinSaltedWhere(left, right, keyL, keyR, timeL, timeR,
-      k => array_contains(hot, col(k).cast("string")),
       within, lateness, salts)
   }
 

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Multimodal
-import graft.sinks.Sinks
 
 class ExtensionsSpec extends SparkSpec {
 
@@ -44,9 +43,8 @@ class ExtensionsSpec extends SparkSpec {
 
   test("partition-pruned scan reads only the filtered partition") {
     val out = java.nio.file.Files.createTempDirectory("prune").toString
-    Sinks.writePartitioned(
-      graft.sources.KafkaSource.replay(Tables.load(spark, sf, "events")),
-      out, Seq("partition"))
+    graft.sources.KafkaSource.replay(Tables.load(spark, sf, "events"))
+      .write.mode("overwrite").partitionBy("partition").parquet(out)
     val df = spark.read.parquet(out).filter(col("partition") === 3)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
 import graft.operators.{Graph, Similarity}
@@ -9,7 +10,8 @@ import graft.streaming.StreamOps
 /** Outside the local fixture the engine chooses the conservative branch:
   * an input it cannot size gets the session's state-partition ceiling
   * and per-hop checkpoints, and a driver-side collect past its bound
-  * fails instead of pulling an unbounded set.
+  * fails instead of pulling an unbounded set. No environment variable
+  * beyond the three documented ones steers a choice.
   */
 class FailSafeSpec extends SparkSpec {
 
@@ -55,5 +57,36 @@ class FailSafeSpec extends SparkSpec {
     val e = intercept[IllegalStateException](
       Similarity.probedCells(probes, 9))
     assert(e.getMessage.contains("more than 9 distinct cells"))
+  }
+
+  test("the BPE merge-table collect fails past the trained merge count") {
+    import spark.implicits._
+    def table(n: Int) = (1 to n).map(i => (i, s"l$i", s"r$i", 1L))
+      .toDF("merge_rank", "lft", "rgt", "pair_count")
+    val n = Shared.BpeMergeCount
+    assert(Shared.bpeMergePairs(table(n)) ===
+      (1 to n).map(i => (s"l$i", s"r$i")))
+    val e = intercept[IllegalStateException](
+      Shared.bpeMergePairs(table(n + 1)))
+    assert(e.getMessage.contains(s"more than $n rows"))
+  }
+
+  test("src/main reads exactly the three documented environment " +
+      "variables") {
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root: $root")
+    val sources = scala.util.Using.resource(Files.walk(root))(
+      _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
+      .map(f => new String(Files.readAllBytes(f), UTF_8))
+    val anyRead = """sys\.env|System\.getenv""".r
+    val keyedRead = ("""(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|""" +
+      """System\.getenv)\(\s*"([A-Za-z0-9_]+)"""").r
+    // every read names its key as a literal, so the key set below is whole
+    assert(sources.map(anyRead.findAllIn(_).size).sum ===
+      sources.map(keyedRead.findAllIn(_).size).sum)
+    val keys = sources.flatMap(keyedRead.findAllMatchIn(_).map(_.group(1)))
+    assert(keys.toSet ===
+      Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_OUT"))
   }
 }

@@ -330,73 +330,6 @@ class Round12Spec extends SparkSpec {
     }
   }
 
-  test("listTimers enumerates live timers: of three registered, the " +
-      "probe cancels all but the earliest via the listing and exactly " +
-      "one alert fires") {
-    // The one timer API call k25/min-merge leave unexercised. The probe
-    // processor registers THREE timers on first sight; on the user's
-    // next batch it walks listTimers() and deletes all but the earliest;
-    // the final watermark passes all three candidate expiries, so any
-    // un-deleted timer would produce a second alert and fail the
-    // exact-sequence assertion.
-    import spark.implicits._
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass", rocksProvider)
-    val src = java.nio.file.Files.createTempDirectory("graft-r12c-src")
-    val out = java.nio.file.Files.createTempDirectory("graft-r12c-out")
-    val cp = java.nio.file.Files.createTempDirectory("graft-r12c-cp")
-    try {
-      val base = 1700000000000L
-      val pin = System.currentTimeMillis() - 3600000L
-      def writeSlice(k: Int, rows: Seq[(Long, Long, Long)]): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-r12c-sl")
-        try {
-          rows.map { case (u, e, ms) =>
-            (u, e, new java.sql.Timestamp(ms))
-          }.toDF("user_id", "event_id", "ts")
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          Extras6.pinSlice(tmp, src, k, pin)
-        } finally graft.queries.Shared.deleteTree(tmp)
-      }
-      writeSlice(0, Seq((7L, 1L, base)))
-      writeSlice(1, Seq((7L, 2L, base + 1000)))   // triggers the cull
-      writeSlice(2, Seq((9L, 3L, base + 7200000L))) // W past all expiries
-      val glob = s"$src/e*.parquet"
-      val stream = spark.readStream
-        .schema(spark.read.parquet(glob).schema)
-        .option("maxFilesPerTrigger", 1).parquet(glob)
-        .select(col("user_id").as("userId"), col("event_id").as("eventId"),
-          col("ts"))
-        .withWatermark("ts", "10 seconds")
-        .as[graft.streaming.UserTimedEvent]
-      val q = StreamOps.timerCullProbe(stream,
-          gapsMs = Seq(60000L, 120000L, 180000L))
-        .toDF("user_id", "alert_ts_ms")
-        .writeStream.format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", cp.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val got = spark.read.parquet(out.toString).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-      assert(got.filter(_._1 == 7L) === Seq((7L, base + 60000L)),
-        s"expected exactly the earliest timer's alert for user 7: $got")
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-      graft.queries.Shared.deleteTree(src)
-      graft.queries.Shared.deleteTree(out)
-      graft.queries.Shared.deleteTree(cp)
-    }
-  }
-
   test("k26 replay is row-identical to k20's on the smoke fixture " +
       "(output-invariance end-to-end through MicroBatchExecution)") {
     val k20 = Extras6.intervalJoinReplay(spark, sf)._1.collect().toSeq

@@ -292,7 +292,7 @@ class Round13Spec extends SparkSpec {
       new java.sql.Timestamp(t0 + i * 1000L)))
     val rightRows = (0L until 200L).map(i => (keyR(i), 100000L + i,
       new java.sql.Timestamp(t0 + i * 70000L)))
-    def run(hotKeys: Option[Seq[Long]], str: Boolean = false)
+    def run(hotKeys: Option[Seq[Long]])
         : (Set[(Long, Long, Long)], Map[Int, Long], Long) = {
       val cp = java.nio.file.Files.createTempDirectory("graft-r13d-cp")
       val mem = MemoryStream[(Long, Long, java.sql.Timestamp)]
@@ -303,10 +303,6 @@ class Round13Spec extends SparkSpec {
         case None => StreamOps.intervalJoin(left, right,
           "user_id", "buyer_id", "view_ts", "buy_ts",
           within = "2 hours", lateness = "1 hour")
-        case Some(hk) if str => StreamOps.intervalJoinSaltedHotStr(
-          left, right, "user_id", "buyer_id", "view_ts", "buy_ts",
-          hotKeys = hk.map(_.toString),
-          within = "2 hours", lateness = "1 hour", salts = 32)
         case Some(hk) => StreamOps.intervalJoinSaltedHot(left, right,
           "user_id", "buyer_id", "view_ts", "buy_ts", hotKeys = hk,
           within = "2 hours", lateness = "1 hour", salts = 32)
@@ -354,55 +350,6 @@ class Round13Spec extends SparkSpec {
       "wrong hot set unexpectedly spread the hot key")
     assert(rStateWrong === rStateU,
       s"wrong hot set replicated right rows: $rStateWrong vs $rStateU")
-  }
-
-  test("string-keyed hot-salt variant matches the long-keyed one on a " +
-      "numeric fixture (and both match unsalted)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = 1700000000000L
-    val leftRows = (0L until 300L).map(i =>
-      (if (i % 3 == 0) 1L else 50L + i, i,
-        new java.sql.Timestamp(t0 + i * 1000L)))
-    val rightRows = (0L until 60L).map(i =>
-      (if (i % 5 == 0) 1L else 50L + i * 4, 1000L + i,
-        new java.sql.Timestamp(t0 + i * 4000L)))
-    def run(variant: String): Set[(Long, Long, Long)] = {
-      val cp = java.nio.file.Files.createTempDirectory("graft-r13s-cp")
-      val mem = MemoryStream[(Long, Long, java.sql.Timestamp)]
-      val left = mem.toDF().toDF("user_id", "view_id", "view_ts")
-      val memR = MemoryStream[(Long, Long, java.sql.Timestamp)]
-      val right = memR.toDF().toDF("buyer_id", "buy_id", "buy_ts")
-      val j = (variant match {
-        case "unsalted" => StreamOps.intervalJoin(left, right,
-          "user_id", "buyer_id", "view_ts", "buy_ts",
-          within = "1 hours", lateness = "1 hour")
-        case "long" => StreamOps.intervalJoinSaltedHot(left, right,
-          "user_id", "buyer_id", "view_ts", "buy_ts", hotKeys = Seq(1L),
-          within = "1 hours", lateness = "1 hour", salts = 8)
-        case "str" => StreamOps.intervalJoinSaltedHotStr(left, right,
-          "user_id", "buyer_id", "view_ts", "buy_ts", hotKeys = Seq("1"),
-          within = "1 hours", lateness = "1 hour", salts = 8)
-      }).select(col("user_id"), col("view_id"), col("buy_id"))
-      val name = s"strv_${variant}_${System.nanoTime()}"
-      val q = j.writeStream.outputMode("append")
-        .option("checkpointLocation", cp.toString)
-        .format("memory").queryName(name).start()
-      try {
-        mem.addData(leftRows: _*)
-        memR.addData(rightRows: _*)
-        q.processAllAvailable()
-      } finally q.stop()
-      val outSet = spark.table(name)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .toSet
-      graft.queries.Shared.deleteTree(cp)
-      outSet
-    }
-    val u = run("unsalted")
-    assert(u.nonEmpty && u.exists(_._1 == 1L) && u.exists(_._1 != 1L))
-    assert(run("long") === u, "long-keyed variant diverged")
-    assert(run("str") === u, "string-keyed variant diverged")
   }
 
   test("g22 delta propagation is value-identical to full propagation, " +

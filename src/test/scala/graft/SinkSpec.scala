@@ -16,19 +16,6 @@ class SinkSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  test("partitioned batch write produces partition-pruned layout") {
-    val out = tmp("sink_batch")
-    val rec = graft.sources.KafkaSource.replay(
-      Tables.load(spark, sf, "events"))
-    Sinks.writePartitioned(rec, out, Seq("partition"))
-    assert(new java.io.File(out).listFiles()
-      .exists(_.getName.startsWith("partition=")))
-    val back = spark.read.parquet(out)
-    assert(back.count() === rec.count())
-    // scanning one partition dir reads a subset
-    assert(back.filter(col("partition") === 0).count() < rec.count())
-  }
-
   test("compaction collapses a fragmented dataset without losing a row") {
     val out = tmp("sink_compact")
     val rec = graft.sources.KafkaSource.replay(
@@ -100,7 +87,7 @@ class SinkSpec extends SparkSpec {
     assert(e1.getMessage.contains("_spark_metadata"))
     // a partitioned root: leaves must be compacted individually
     val parted = tmp("sink_compact_parted")
-    Sinks.writePartitioned(rec, parted, Seq("partition"))
+    rec.write.mode("overwrite").partitionBy("partition").parquet(parted)
     val e2 = intercept[IllegalArgumentException](
       Sinks.compact(spark, parted))
     assert(e2.getMessage.contains("leaf directories"))
@@ -130,43 +117,6 @@ class SinkSpec extends SparkSpec {
     }
     assert(spark.read.parquet(out).count() ===
       Tables.load(spark, sf, "orders").count())
-  }
-
-  test("bucketed tables join with ZERO exchanges (co-located " +
-      "SortMergeJoin) and result matches the shuffled join") {
-    val conf = spark.conf
-    val savedBroadcast = conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val o = Tables.load(spark, sf, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-      val l = Tables.load(spark, sf, "lineitem")
-        .select(col("l_orderkey").as("o_orderkey"), col("l_quantity"))
-      Sinks.writeBucketed(o, "bkt_orders", tmp("bkt_o"), "o_orderkey", 8)
-      Sinks.writeBucketed(l, "bkt_lineitem", tmp("bkt_l"), "o_orderkey", 8)
-      val joined = spark.table("bkt_orders")
-        .join(spark.table("bkt_lineitem"), "o_orderkey")
-      val p = joined.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      assert(p.contains("SortMergeJoin"), p)
-      assert(!p.contains("Exchange"), p)
-      // and the layout is not just plan-pretty — values match the
-      // plain shuffled join
-      // decimal BEFORE the sum: exact order-free folds on both plans
-      val expect = o.join(l, "o_orderkey").agg(
-        sum(col("o_totalprice").cast("decimal(18,2)")),
-        sum(col("l_quantity").cast("decimal(18,2)"))).collect()(0)
-      val got = joined.agg(
-        sum(col("o_totalprice").cast("decimal(18,2)")),
-        sum(col("l_quantity").cast("decimal(18,2)"))).collect()(0)
-      assert(got === expect)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS bkt_orders")
-      spark.sql("DROP TABLE IF EXISTS bkt_lineitem")
-      savedBroadcast.fold(
-        conf.unset("spark.sql.autoBroadcastJoinThreshold"))(
-        conf.set("spark.sql.autoBroadcastJoinThreshold", _))
-    }
   }
 
   test("z-ordered write clusters BOTH dimensions: a rectangle query " +
@@ -294,59 +244,6 @@ class SinkSpec extends SparkSpec {
     assert(stream.nonEmpty)
   }
 
-  test("transformWithState gap detector matches the fMGWS twin (RocksDB)") {
-    import spark.implicits._
-    implicit val sqlCtx = classic.sqlContext
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[KafkaRecord]
-      val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-      def rec(p: Int, off: Long) =
-        KafkaRecord("t", p, off, t0, "k", "v", null)
-      mem.addData(rec(0, 0), rec(0, 1), rec(0, 2), rec(1, 10))
-      mem.addData(rec(0, 5), rec(0, 6), rec(1, 11)) // hole 2->5 on p0
-      mem.addData(rec(0, 9), rec(1, 12))            // hole 6->9 on p0
-      val q = StreamOps.detectOffsetGapsTws(mem.toDS())
-        .writeStream.outputMode("append")
-        .format("memory").queryName("gaps_tws").start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      val gaps = spark.table("gaps_tws").as[OffsetGapRow].collect()
-        .map(g => (g.partition, g.fromOffset, g.toOffset)).toSet
-      // identical emission contract to the flatMapGroupsWithState twin
-      assert(gaps === Set((0, 2L, 5L), (0, 6L, 9L)))
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("stream-static join enriches without shuffling the stream") {
-    import spark.implicits._
-    implicit val sqlCtx = classic.sqlContext
-    val mem = MemoryStream[KafkaRecord]
-    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    mem.addData(KafkaRecord("t", 0, 0, t0, "click", "v", null),
-      KafkaRecord("t", 0, 1, t0, "zzz", "v", null))
-    val dim = Seq(("click", 1.0), ("view", 0.1)).toDF("key", "weight")
-    val q = StreamOps.enrich(mem.toDF(), dim, Seq("key"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName("enriched").start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    val rows = spark.table("enriched")
-      .select("key", "weight").collect()
-      .map(r => r.getString(0) -> Option(r.get(1))).toMap
-    assert(rows("click") === Some(1.0))
-    assert(rows("zzz") === None) // left join keeps unmatched stream rows
-  }
-
   test("CREATE VIEW flow from the reference README (31-38) works") {
     val rec = graft.sources.KafkaSource.replay(
       Tables.load(spark, sf, "events"))
@@ -356,34 +253,6 @@ class SinkSpec extends SparkSpec {
       "SELECT count(*) FROM kafka_messages WHERE error IS NULL")
       .collect()(0).getLong(0)
     assert(n1 > 0 && n2 < n1) // error rows exist and views re-query
-  }
-
-  test("zone-map manifest: pruned read opens a strict file subset and " +
-      "returns exactly the full-scan filter result; an out-of-range " +
-      "predicate reads zero files") {
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-manifest").toString + "/orders"
-    val o = Tables.load(spark, sf, "orders")
-    Sinks.writeWithManifest(o, dir, Seq("o_orderkey"), numFiles = 8)
-    val manifest = spark.read.parquet(dir + "_manifest")
-    assert(manifest.count() === 8)
-    val keys = o.agg(min(col("o_orderkey")), max(col("o_orderkey")))
-      .collect()(0)
-    val (lo, hi) = (keys.getLong(0), keys.getLong(0) +
-      (keys.getLong(1) - keys.getLong(0)) / 10)
-    val pruned = Sinks.readPruned(spark, dir, "o_orderkey", lo, hi)
-    // the narrow range must touch fewer files than the table has
-    val filesTouched = pruned.select(input_file_name()).distinct().count()
-    assert(filesTouched < 8, s"no pruning: $filesTouched files")
-    val want = spark.read.parquet(dir)
-      .filter(col("o_orderkey") >= lo && col("o_orderkey") <= hi)
-    assert(pruned.count() === want.count())
-    assert(pruned.agg(sum(col("o_orderkey"))).collect()(0).getLong(0) ===
-      want.agg(sum(col("o_orderkey"))).collect()(0).getLong(0))
-    // fully out-of-range → empty without opening data files
-    assert(Sinks.readPruned(spark, dir, "o_orderkey",
-      keys.getLong(1) + 1, keys.getLong(1) + 2).count() === 0)
   }
 }
 

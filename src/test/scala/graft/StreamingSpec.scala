@@ -119,64 +119,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("streaming anomaly gate == q92's batch flags, row-exact per " +
-      "(type, hour) (sf0.01)") {
-    import org.apache.spark.sql.types.DecimalType
-    // publish the stats table exactly as q92 computes it
-    val ev = Tables.load(spark, sf01, "events")
-      .withColumn("hour", hour(col("ts")).cast("int"))
-      .withColumn("vd", col("value").cast(DecimalType(18, 2)))
-    val stats = ev.groupBy(col("event_type"), col("hour"))
-      .agg(count(lit(1)).as("n"), sum(col("vd")).as("s1"),
-        sum(col("vd") * col("vd")).as("s2"))
-      .withColumn("mean", col("s1").cast("double") / col("n"))
-      .withColumn("sd", sqrt((col("s2").cast("double") -
-        col("s1").cast("double") * col("s1").cast("double") / col("n"))
-        / col("n")))
-      .select("event_type", "hour", "mean", "sd")
-    val flagged = StreamOps.anomalyFlags(
-      StreamOps.eventStream(spark, sf01), stats)
-    val q = flagged.writeStream.outputMode("append")
-      .format("memory").queryName("anom").start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    val got = spark.table("anom").groupBy("event_type", "hour")
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val batch = ev.join(broadcast(stats), Seq("event_type", "hour"))
-      .filter(abs(col("vd").cast("double") - col("mean")) >
-        col("sd") * 2)
-      .groupBy("event_type", "hour").agg(count(lit(1)).as("n")).collect()
-      .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
-    assert(got.nonEmpty && got === batch)
-  }
-
-  test("streaming windowed approx-distinct users == batch HLL++ " +
-      "(same estimator through the state-store merge path, sf0.01)") {
-    val agg = StreamOps.windowedDistinctUsers(
-      StreamOps.eventStream(spark, sf01))
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName("wdu").start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    val got = spark.table("wdu").collect()
-      .map(r => (r.get(0), r.getString(1)) -> r.getLong(2)).toMap
-    val batch = Tables.load(spark, sf01, "events")
-      .groupBy(window(col("ts").cast("timestamp"), "1 day")("start")
-        .as("bucket"), col("event_type"))
-      .agg(approx_count_distinct(col("user_id")).as("n")).collect()
-      .map(r => (r.get(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(got.nonEmpty && got.keySet === batch.keySet)
-    // HLL++ merge order may differ between the streaming partial-merge
-    // tree and the batch one; the registers are merged with max so the
-    // estimate is identical when every partial is merged — assert exact
-    // equality, falling back to a 2% bound only if the engines ever
-    // split partials differently
-    got.foreach { case (k, v) =>
-      val b = batch(k)
-      assert(math.abs(v - b) <= math.max(1L, (b * 0.02).toLong),
-        s"$k: streaming=$v batch=$b")
-    }
-  }
-
   test("streaming sliding windows == batch sliding windows (sf0.01)") {
     val agg = StreamOps.windowedCounts(StreamOps.replayStream(spark, sf01),
       windowLen = "10 minutes", slide = Some("5 minutes"))
@@ -278,71 +220,6 @@ class StreamingSpec extends SparkSpec {
     assert(pairs === Set(1L)) // user 2 bought too late, 3/4 unmatched
   }
 
-  test("streaming minhash-union sketch across micro-batches == batch UDAF") {
-    import spark.implicits._
-    implicit val sqlCtx = classic.sqlContext
-    val mem = MemoryStream[(Long, String, String)]
-    val rows = Seq(
-      (1L, "web", "the quick brown fox jumps over the lazy dog"),
-      (2L, "web", "a completely different document about spark engines"),
-      (3L, "books", "call me ishmael some years ago never mind how long"),
-      (4L, "web", "the quick brown fox jumps over the lazy dog again"),
-      (5L, "books", "it was the best of times it was the worst of times"))
-    // two micro-batches force a state merge (partial-agg + buffer
-    // serialization) inside the streaming engine
-    mem.addData(rows.take(2): _*)
-    mem.addData(rows.drop(2): _*)
-    val agg = StreamOps.sketchByKey(
-      mem.toDF().toDF("doc_id", "source", "text"))
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName("sketch").start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    val got = spark.table("sketch").collect()
-      .map(r => r.getString(0) -> ((r.getSeq[Long](1), r.getLong(2)))).toMap
-    val batch = StreamOps.sketchByKey(rows.toDF("doc_id", "source", "text"))
-      .collect()
-      .map(r => r.getString(0) -> ((r.getSeq[Long](1), r.getLong(2)))).toMap
-    assert(got === batch)
-    assert(got("web")._2 === 3L)
-    // the union signature is the element-wise min of the member signatures
-    val sigs = rows.toDF("doc_id", "source", "text")
-      .filter(col("source") === "web")
-      .select(graft.functions.TextFunctions.minhash_signature(col("text")))
-      .collect().map(_.getSeq[Long](0)).toSeq
-    val expected = sigs.transpose.map(_.min)
-    assert(got("web")._1 === expected)
-  }
-
-  test("streaming misra-gries keeps heavy terms across micro-batch merges") {
-    import spark.implicits._
-    implicit val sqlCtx = classic.sqlContext
-    val mem = MemoryStream[(String, String)]
-    // per key: one dominant term drowned in one-off noise, split across
-    // micro-batches so the sketch state must merge
-    val b1 = Seq("web" -> (Seq.fill(60)("hot") ++
-      (0 until 40).map(i => s"n$i")).mkString(" "))
-    val b2 = Seq(
-      "web" -> (Seq.fill(40)("hot") ++ (40 until 80).map(i => s"n$i"))
-        .mkString(" "),
-      "books" -> Seq.fill(10)("tome").mkString(" "))
-    mem.addData(b1: _*)
-    mem.addData(b2: _*)
-    val q = StreamOps.frequentTermsByKey(
-        mem.toDF().toDF("source", "text"), capacity = 9)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("freq_terms").start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    val got = spark.table("freq_terms").collect()
-      .map(r => r.getString(0) ->
-        ((r.getAs[Map[String, Long]]("candidates"), r.getLong(2)))).toMap
-    // web: n = 180, capacity 9 → anything with freq > 18 must survive;
-    // "hot" has 100
-    assert(got("web")._2 === 180L)
-    assert(got("web")._1.contains("hot"), got("web")._1.keys)
-    assert(got("web")._1.size <= 9)
-    assert(got("books")._1 === Map("tome" -> 10L))
-  }
-
   test("streaming IVF cell assignment == batch, bit-exact (stateless " +
       "map over the stream; centroids broadcast, no stream shuffle)") {
     import spark.implicits._
@@ -436,61 +313,5 @@ class StreamingSpec extends SparkSpec {
     assert(got(1L) === ((true, Some("exact"))))
     assert(got(2L) === ((true, Some("near"))))
     assert(got(3L) === ((false, None)))
-  }
-
-  test("streaming CUSUM peak == batch q71 after in-order replay " +
-      "(transformWithState, RocksDB, multi-batch state carry)") {
-    import spark.implicits._
-    implicit val sqlCtx = classic.sqlContext
-    val prev = spark.conf.getOption(
-      "spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-    try {
-      val batch = SparkEntry.queries("q71_cusum")(spark, sf).collect()
-        .map(r => r.getString(0) ->
-          (r.getDouble(1), r.getLong(3))).toMap
-
-      val pts = Tables.load(spark, sf, "events")
-        .select(col("event_type").as("key"),
-          unix_micros(col("ts").cast("timestamp")).as("tsUs"),
-          col("event_id").as("eventId"), col("value"))
-        .as[graft.streaming.CusumPoint]
-        .collect().sortBy(p => (p.tsUs, p.eventId))
-      val mem = MemoryStream[graft.streaming.CusumPoint]
-      val q = graft.streaming.StreamOps.cusumStream(mem.toDS())
-        .writeStream.outputMode("append")
-        .format("memory").queryName("cusum").start()
-      try {
-        // three in-order micro-batches — the state must carry across
-        pts.grouped(math.max(1, pts.length / 3 + 1)).foreach { chunk =>
-          mem.addData(chunk.toIndexedSeq: _*)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
-
-      val ups = spark.table("cusum").collect()
-        .map(r => (r.getString(0), r.getLong(1),
-          r.getDecimal(2).doubleValue()))
-      val byKey = ups.groupBy(_._1)
-      assert(byKey.keySet === batch.keySet)
-      byKey.foreach { case (k, rows) =>
-        val peak = rows.map(_._3).max
-        def r6(x: Double) = BigDecimal(x)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        assert(r6(peak) === batch(k)._1, s"key $k")
-        // the batch argmax event is among the streaming peak rows
-        assert(rows.filter(_._3 == peak).map(_._2).contains(batch(k)._2),
-          s"key $k peak event")
-      }
-    } finally {
-      prev match {
-        case Some(p) => spark.conf.set(
-          "spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset(
-          "spark.sql.streaming.stateStore.providerClass")
-      }
-    }
   }
 }
