@@ -31,7 +31,7 @@ object Bench {
     // alphabetically-first query doesn't absorb one-time startup cost.
     Tables.names.foreach { n =>
       try Tables.load(spark, sfDir, n).count()
-      catch { case _: Throwable => () }
+      catch { case scala.util.control.NonFatal(_) => () }
     }
     // Host-contention provenance (VERDICT r6 item 5): 1-minute load
     // average + available processors sampled before and after the timed
@@ -120,7 +120,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
+          catch { case scala.util.control.NonFatal(_) => false }
         val t = (System.nanoTime() - t0) / 1e9
         anyMins = anyMins.updated(name,
           math.min(anyMins.getOrElse(name, Double.MaxValue), t))

@@ -473,17 +473,6 @@ object Dedup {
         minhashSignatures(existing.repartition(col(idCol)), idCol, textCol,
           k), k, bands)
       .select(col("band_idx"), col("band_val")).distinct()
-    incrementalAgainst(newDocs, exactIdx, bandIdx, idCol, textCol, k, bands)
-  }
-
-  /** The shared lookup core: dedups `newDocs` against an exact-hash set
-    * (`__h`) and a banded key set — whether those were just computed
-    * ([[incrementalDedup]]) or read back from a persisted index
-    * ([[incrementalDedupIndexed]]).
-    */
-  private def incrementalAgainst(newDocs: DataFrame, exactIdx: DataFrame,
-      bandIdx: DataFrame, idCol: String, textCol: String,
-      k: Int, bands: Int): DataFrame = {
     val nw = newDocs.repartition(col(idCol))
     val exactHit = nw.select(col(idCol), md5(col(textCol)).as("__h"))
       .join(exactIdx, Seq("__h"), "left_semi")
@@ -501,28 +490,6 @@ object Dedup {
         (col("__eid").isNotNull || col("__nid").isNotNull).as("dropped"),
         when(col("__eid").isNotNull, "exact")
           .when(col("__nid").isNotNull, "near").as("reason"))
-  }
-
-  /** Persist a corpus's dedup index: the exact md5 set plus the banded
-    * minhash key set, as parquet (bands partitioned by band_idx). Built
-    * ONCE over the full corpus — at 100 TB this is the amortization
-    * that matters: every incremental batch thereafter dedups against
-    * key-sized files ([[incrementalDedupIndexed]]) without re-reading
-    * or re-hashing a byte of corpus text. Index size is one 32-char
-    * hash per distinct doc + one long per (band, doc): ~10^-4 of the
-    * corpus.
-    */
-  def writeDedupIndex(corpus: DataFrame, path: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      k: Int = 16, bands: Int = 4): Unit = {
-    corpus.select(md5(col(textCol)).as("__h")).distinct()
-      .write.mode("overwrite").parquet(s"$path/exact")
-    minhashBands(
-        minhashSignatures(corpus.repartition(col(idCol)), idCol, textCol,
-          k), k, bands)
-      .select(col("band_idx"), col("band_val")).distinct()
-      .write.mode("overwrite").partitionBy("band_idx")
-      .parquet(s"$path/bands")
   }
 
   /** Persist the certified near-dup pair set — [[minhashPairs]] output,
@@ -547,18 +514,6 @@ object Dedup {
   def pairsFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
     spark.read.parquet(path)
-
-  /** [[incrementalDedup]] against a [[writeDedupIndex]] on disk — same
-    * output contract, bit-identical result (DedupSpec), corpus never
-    * touched.
-    */
-  def incrementalDedupIndexed(spark: org.apache.spark.sql.SparkSession,
-      newDocs: DataFrame, path: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      k: Int = 16, bands: Int = 4): DataFrame =
-    incrementalAgainst(newDocs,
-      spark.read.parquet(s"$path/exact"),
-      spark.read.parquet(s"$path/bands"), idCol, textCol, k, bands)
 
   // ---- embedding near-dup ----------------------------------------------
 

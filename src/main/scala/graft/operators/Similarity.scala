@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *    baseline and the oracle-checkable ground truth.
   *  - IVF ([[ivfAssign]] / [[ivfSearch]]): corpus is bucketed by nearest
   *    centroid (the inverted file); a query probes only `nprobe` cells.
-  *    At 100 TB the corpus is written partitioned by cell so a query scans
+  *    At 100 TB the corpus would be written partitioned by cell so a query scans
   *    a few partitions instead of everything. Centroids here are a
   *    deterministic sample (id % modulus == 0) so the oracle can rebuild
   *    the exact same index; swap in k-means centroids in production.
@@ -815,9 +815,9 @@ object Similarity {
     * instead of post-filtering an unfiltered top-k (which keeps ~k/|attr|
     * of the list). Cells, assignment and probes are identical to
     * [[ivfSearch]]; only the scoring join adds the attribute equality —
-    * on a [[writeIvfIndex]]-style layout partitioned by (attr, cell)
-    * both predicates become partition filters and the scan touches only
-    * the query's own attribute slice. Output:
+    * on a layout partitioned by (attr, cell) both predicates would become
+    * partition filters and the scan would touch only the query's own
+    * attribute slice. Output:
     * (query_id, neighbor_id, cosine, rank), neighbors all same-attribute.
     */
   def filteredIvfSearch(corpus: DataFrame, queries: DataFrame,
@@ -854,83 +854,6 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), col("cosine"),
         col("rank"))
-  }
-
-  /** Materialize the IVF index as a cell-partitioned parquet dataset:
-    * one directory per cell carrying (id, v, nrm). This is the on-disk
-    * shape the ivfSearch docstring promises for 100 TB — a query's
-    * `nprobe` cells become PARTITION FILTERS on the scan, so the
-    * engine lists and reads only those directories; the rest of the
-    * corpus contributes zero I/O (asserted in SimilaritySpec against
-    * the plan's PartitionFilters).
-    */
-  def writeIvfIndex(corpus: DataFrame, path: String,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      centroidModulus: Int = 50): Unit = {
-    val centroids = sampleCentroids(corpus, idCol, vecCol, centroidModulus)
-    // one corpus scan: the assignment carries the vector through, the
-    // norm is computed on the same pass — no corpus self-join on id
-    assignCells(corpus.select(col(idCol).as("id"),
-        col(vecCol).cast("array<double>").as("v")), centroids)
-      .select(col("id"), col("v"), sqrt(dot(col("v"), col("v"))).as("nrm"),
-        col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
-  }
-
-  /** Search a persisted [[writeIvfIndex]] dataset: probes resolve from
-    * the (tiny, re-derived) centroid set, then the index scan carries
-    * `cell IN (probes)` — partition pruning does the cell restriction
-    * at the FILE level. Ranking matches [[ivfSearch]] row-for-row
-    * (same round-6 cosine, same tie-break).
-    * Output: (query_id, neighbor_id, cosine, rank).
-    */
-  def ivfSearchFromIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: DataFrame, queries: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      centroidModulus: Int = 50, nprobe: Int = 2, k: Int = 5): DataFrame = {
-    val centroids = sampleCentroids(corpus, idCol, vecCol, centroidModulus)
-    val q = normed(queries, idCol, vecCol, "query_id", "vq", "nq")
-    val pw = Window.partitionBy(col("query_id"))
-      .orderBy(col("d2"), col("centroid_id"))
-    val probes = q.crossJoin(broadcast(centroids))
-      .withColumn("d2", round(dist2(col("vq"), col("cv")), 6))
-      .withColumn("pr", row_number().over(pw))
-      .filter(col("pr") <= nprobe)
-      .select(col("query_id"), col("vq"), col("nq"),
-        col("centroid_id").as("cell"))
-    // the probed cell set is tiny (≤ |Q|·nprobe ids) — collect it into
-    // the filter LITERAL so the scan prunes partitions statically; an
-    // isin against a literal list is what partition pruning understands.
-    val cells = probedCells(probes, q.count() * math.max(nprobe, 0))
-    val idx = spark.read.parquet(path)
-      .filter(col("cell").isin(cells: _*))
-    val scored = idx
-      .select(col("id").as("neighbor_id"), col("v").as("vc"),
-        col("nrm").as("nc"), col("cell"))
-      .join(broadcast(probes), "cell")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine",
-        round(dot(col("vq"), col("vc")) / (col("nq") * col("nc")), 6))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
-  }
-
-  /** The distinct `cell` ids of `probes`, collected through
-    * `limit(bound + 1)` so at most one id past `bound` reaches the
-    * driver; more than `bound` ids fail loudly instead of feeding an
-    * unbounded literal list to the scan filter.
-    */
-  private[graft] def probedCells(probes: DataFrame, bound: Long)
-      : Array[Long] = {
-    val cells = probes.select(col("cell")).distinct()
-      .limit(math.min(bound + 1, Int.MaxValue.toLong).toInt)
-      .collect().map(_.getLong(0))
-    if (cells.length > bound) throw new IllegalStateException(
-      s"IVF probes hit more than $bound distinct cells (|Q|·nprobe)")
-    cells
   }
 
   /** IVF-PQ search — the composition a production ANN index actually

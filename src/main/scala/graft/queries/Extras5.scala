@@ -26,7 +26,7 @@ object Extras5 {
     // back and hash-match it against the same DuckDB minhash oracle that
     // certifies d02's from-scratch computation — proof the
     // persist-once/read-many path is value-identical to recomputing
-    // (the ivfSearchFromIndex identity discipline, VERDICT r7 item 3).
+    // (VERDICT r7 item 3).
     "g19_pair_index" -> { (s, dir) =>
       Shared.pairs(s, dir).orderBy(col("a"), col("b"))
     },

@@ -68,11 +68,10 @@ object KafkaParity {
         .orderBy(col("partition"), col("key"))
     },
 
-    // Batch offset-continuity audit — the batch twin of
-    // StreamOps.detectOffsetGaps: per partition, how many adjacent-offset
-    // gaps and how much is missing. One window + one aggregation, both
-    // partition-keyed (the natural Kafka parallelism unit; no global
-    // sort).
+    // Batch offset-continuity audit: per partition, how many
+    // adjacent-offset gaps and how much is missing. One window + one
+    // aggregation, both partition-keyed (the natural Kafka parallelism
+    // unit; no global sort).
     "k06_offset_audit" -> { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("partition")).orderBy(col("offset"))

@@ -551,9 +551,8 @@ object Relational2 {
         .orderBy(col("user_id"))
     },
 
-    // Morton (z-order) key battery — the arithmetic behind the
-    // z-clustered layout (Sinks.writeZOrdered), certified per row; the
-    // file-level locality/pruning claims are gated in SinkSpec.
+    // Morton (z-order) key battery — the arithmetic of Sinks.zOrderKey,
+    // certified per row; SinkSpec checks its bit interleave on literals.
     "q50_zorder_key" -> { (s, dir) =>
       val x = col("l_partkey") % 1024
       val y = col("l_suppkey") % 1024

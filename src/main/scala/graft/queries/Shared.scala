@@ -17,8 +17,8 @@ import graft.operators.{Dedup, Graph}
   * per query at sf0.1; the bulk of the g-family's 35 s). At 100 TB that
   * is the difference between re-hashing the corpus 25 times and hashing
   * it ONCE: the pair set is persisted as a key-sized parquet pair index
-  * ([[Dedup.writePairIndex]], the `writeDedupIndex`/`writeIvfIndex`
-  * discipline) and every later consumer only reads the index. The
+  * ([[Dedup.writePairIndex]]) and every later consumer only reads the
+  * index. The
   * roundtrip itself is oracle-certified: `g19_pair_index` reads THIS
   * session index back and must hash-match the same minhash-pairs oracle
   * that certifies d02's from-scratch computation.

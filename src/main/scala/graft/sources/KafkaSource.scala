@@ -212,15 +212,6 @@ object KafkaSource {
     kafkaOptions(brokers, topic, groupId, sasl, partitions) ++
       maxOffsetsPerTrigger.map(n => "maxOffsetsPerTrigger" -> n.toString)
 
-  /** Alias for [[stream]] under the name the reference README advertises
-    * (`kafquack(...)`, README.md:13,19) even though its code registers
-    * `kafka_consumer` (cpp:223) — both names work here, `kafka_consumer`
-    * (= [[stream]]) being canonical. See SURVEY.md "Important discrepancy".
-    */
-  def kafquack(spark: SparkSession, brokers: String, topic: String,
-      groupId: String, sasl: Option[SaslConfig] = None): DataFrame =
-    stream(spark, brokers, topic, groupId, sasl)
-
   /** Batch twin (earliest→latest snapshot) for testability. With a time
     * range, the connector resolves offsets from broker timestamp indexes
     * (`startingTimestamp`/`endingTimestamp`, epoch-ms UTC) — offset-range
@@ -383,9 +374,9 @@ object KafkaSource {
     * whose payload fails JSON decoding get error=<reason> instead of failing
     * the query (the reference's model, cpp:189-197). Such a row's value
     * becomes NULL so it keeps `value IS NULL XOR error IS NULL`; the raw
-    * payload survives in the error text. PERMISSIVE from_json never yields
-    * a null struct, so malformed input is detected via a corrupt-record
-    * field appended to the schema.
+    * payload survives in the error text. Malformed input is detected via
+    * a corrupt-record field appended to the schema; a blank payload, which
+    * PERMISSIVE from_json turns into a NULL struct, is undecodable too.
     */
   def withJsonDecoded(records: DataFrame, jsonSchema: StructType,
       decodedCol: String = "decoded"): DataFrame = {
@@ -395,7 +386,7 @@ object KafkaSource {
     val parsed = from_json(col("value"), augmented,
       Map("columnNameOfCorruptRecord" -> corrupt, "mode" -> "PERMISSIVE"))
     val undecodable = col("error").isNull && col("value").isNotNull &&
-      col("__p").getField(corrupt).isNotNull
+      (col("__p").isNull || col("__p").getField(corrupt).isNotNull)
     records.withColumn("__p", parsed)
       .withColumn("__bad", undecodable)
       .withColumn("error", when(col("__bad"),

@@ -5,19 +5,12 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders,
   SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQueryProgress,
-  TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
+  StatefulProcessor, StreamingQueryProgress, TTLConfig, TimeMode,
+  TimerValues, ValueState}
 import org.apache.spark.sql.types._
 
-import graft.sources.{KafkaRecord, KafkaSource}
-
-/** A detected hole in a partition's offset sequence. */
-case class OffsetGap(topic: String, partition: Int,
-    fromOffset: Long, toOffset: Long)
-
-/** Per-(topic,partition) offset tracking state. */
-case class OffsetState(lastOffset: Long)
+import graft.sources.KafkaSource
 
 /** One event entering the per-user running-stats processor; `tsUs` is
   * epoch-micros of the event time (kept integral so the emitted column
@@ -447,32 +440,6 @@ object StreamOps {
       lateness: String = "10 minutes"): DataFrame =
     records.withWatermark(timeCol, lateness)
       .dropDuplicatesWithinWatermark(keyCols)
-
-  /** Custom stateful operator (SURVEY.md §2.2 "Streaming: stateful ops"):
-    * per-(topic,partition) offset-gap detection over an at-least-once
-    * stream, via flatMapGroupsWithState. State is one long per partition —
-    * bounded regardless of stream volume. Offsets are sorted within each
-    * micro-batch group so emission is deterministic.
-    */
-  def detectOffsetGaps(records: Dataset[KafkaRecord]): Dataset[OffsetGap] = {
-    import records.sparkSession.implicits._
-    records.groupByKey(r => (r.topic, r.partition))
-      .flatMapGroupsWithState(
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: (String, Int), rows: Iterator[KafkaRecord],
-            state: GroupState[OffsetState]) =>
-          val sorted = rows.map(_.offset).toArray.sorted
-          var last = state.getOption.map(_.lastOffset).getOrElse(-1L)
-          val gaps = Seq.newBuilder[OffsetGap]
-          sorted.foreach { off =>
-            if (last >= 0 && off > last + 1)
-              gaps += OffsetGap(key._1, key._2, last, off)
-            if (off > last) last = off
-          }
-          state.update(OffsetState(last))
-          gaps.result().iterator
-      }
-  }
 
   /** Per-user running stats over typed events (see [[UserStatsProcessor]]);
     * requires the RocksDB state store provider, like every

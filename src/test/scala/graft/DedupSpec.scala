@@ -375,22 +375,6 @@ class DedupSpec extends SparkSpec {
     // delta against an EMPTY corpus keeps everything
     val empty = Dedup.incrementalDedup(newDocs, existing.limit(0)).collect()
     assert(empty.forall(!_.getBoolean(1)))
-
-    // the persisted index returns the IDENTICAL verdicts: build once,
-    // look up from disk, corpus never re-read
-    val idx = java.nio.file.Files
-      .createTempDirectory("dedup_idx").toString
-    Dedup.writeDedupIndex(existing, idx)
-    val fromDisk = Dedup.incrementalDedupIndexed(spark, newDocs, idx)
-      .collect()
-      .map(r => r.getLong(0) ->
-        ((r.getBoolean(1), Option(r.getString(2))))).toMap
-    assert(fromDisk === got.toMap)
-    // and the index really is key-sized: hashes + band keys only
-    val exactCols = spark.read.parquet(s"$idx/exact").columns.toSeq
-    val bandCols = spark.read.parquet(s"$idx/bands").columns.toSeq
-    assert(exactCols === Seq("__h"))
-    assert(bandCols.sorted === Seq("band_idx", "band_val"))
   }
 
   test("native cdc_boundary_ends == declarative hex/md5/conv twin, " +

@@ -1,9 +1,9 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
-import graft.operators.{Graph, Similarity}
+import graft.operators.Graph
 import graft.queries.Shared
 import graft.streaming.StreamOps
 
@@ -11,7 +11,8 @@ import graft.streaming.StreamOps
   * an input it cannot size gets the session's state-partition ceiling
   * and per-hop checkpoints, and a driver-side collect past its bound
   * fails instead of pulling an unbounded set. No environment variable
-  * beyond the three documented ones steers a choice.
+  * beyond the three documented ones steers a choice, and no engine def
+  * survives that only specs call.
   */
 class FailSafeSpec extends SparkSpec {
 
@@ -51,14 +52,6 @@ class FailSafeSpec extends SparkSpec {
     } finally Shared.deleteTree(tmp)
   }
 
-  test("the IVF probed-cell collect fails past |Q|·nprobe cells") {
-    val probes = spark.range(10).withColumnRenamed("id", "cell")
-    assert(Similarity.probedCells(probes, 10).sorted.toSeq === (0L until 10L))
-    val e = intercept[IllegalStateException](
-      Similarity.probedCells(probes, 9))
-    assert(e.getMessage.contains("more than 9 distinct cells"))
-  }
-
   test("the BPE merge-table collect fails past the trained merge count") {
     import spark.implicits._
     def table(n: Int) = (1 to n).map(i => (i, s"l$i", s"r$i", 1L))
@@ -88,5 +81,50 @@ class FailSafeSpec extends SparkSpec {
     val keys = sources.flatMap(keyedRead.findAllMatchIn(_).map(_.group(1)))
     assert(keys.toSet ===
       Set("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_BENCH_OUT"))
+  }
+
+  test("every def under the engine packages is reached from src/main or " +
+      "perfbench/src") {
+    import scala.jdk.CollectionConverters._
+    def sources(dir: String): List[(Path, String)] = {
+      val root = Paths.get(dir)
+      assert(Files.isDirectory(root), s"run from the project root: $root")
+      scala.util.Using.resource(Files.walk(root))(
+        _.iterator().asScala.filter(_.toString.endsWith(".scala")).toList)
+        .map(f => f -> new String(Files.readAllBytes(f), UTF_8))
+    }
+    // literals are matched so that a "//" or "/*" inside one opens no
+    // comment; comments are blanked, literals kept (a name spliced into an
+    // interpolated string is a real call)
+    val lexeme = ("""(?:"{3}[\s\S]*?"{3}|"(?:[^"\\\n]|\\.)*"|""" +
+      """'(?:[^'\\\n]|\\.)'|//[^\n]*|/\*[\s\S]*?\*/)""").r
+    def code(src: String): String = lexeme.replaceAllIn(src, m =>
+      scala.util.matching.Regex.quoteReplacement(
+        if (m.matched.startsWith("/")) m.matched.replaceAll("[^\n]", "")
+        else m.matched))
+    def counts(it: Iterator[String]): Map[String, Int] =
+      it.toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+    val main = (sources("src/main/scala") ++ sources("perfbench/src"))
+      .map { case (file, src) => file -> code(src) }
+    val texts = main.map(_._2)
+    val words = counts(texts.iterator.flatMap("""\w+""".r.findAllIn(_)))
+    val defs = counts(texts.iterator.flatMap(
+      """\bdef\s+(\w+)""".r.findAllMatchIn(_).map(_.group(1))))
+    // members of top-level objects and classes; overrides are called by
+    // their host (Spark, Catalyst), not by name
+    val member = ("""(?m)^  (?:(?:private|protected)(?:\[\w+\])?\s+|""" +
+      """final\s+|implicit\s+)*def\s+(\w+)""").r
+    val engine = Set("operators", "functions", "sinks", "streaming",
+      "sources", "io")
+    val unreached = for {
+      (file, text) <- main
+      if file.startsWith(Paths.get("src/main/scala/graft")) &&
+        engine(file.getParent.getFileName.toString)
+      name <- member.findAllMatchIn(text).map(_.group(1))
+      if !name.endsWith("Hof") && name != "augmentForMips"
+      if words(name) == defs(name)
+    } yield s"${file.getFileName}: $name"
+    assert(unreached.isEmpty,
+      s"defs no main code or benchmark file calls: ${unreached.mkString(", ")}")
   }
 }

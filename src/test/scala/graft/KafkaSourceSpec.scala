@@ -108,7 +108,9 @@ class KafkaSourceSpec extends SparkSpec {
     val rows = Seq(
       ("t", 0, 0L, null: String, """{"k": 1}""", null: String),
       ("t", 0, 1L, null: String, "not-json", null: String),
-      ("t", 0, 2L, null: String, null: String, "upstream error"))
+      ("t", 0, 2L, null: String, null: String, "upstream error"),
+      ("t", 0, 3L, null: String, "", null: String),
+      ("t", 0, 4L, null: String, "   ", null: String))
       .toDF("topic", "partition", "offset", "key", "value", "error")
     val dec = KafkaSource.withJsonDecoded(rows,
       StructType(Seq(StructField("k", IntegerType))))
@@ -117,11 +119,16 @@ class KafkaSourceSpec extends SparkSpec {
     // the undecodable row keeps its payload only in the error text
     assert(byOffset(1).getAs[String]("error") === "json decode error: not-json")
     assert(byOffset(2).getAs[String]("error") === "upstream error")
+    // a blank payload decodes to a NULL struct: undecodable, not kept
+    assert(byOffset(3).getAs[String]("error") === "json decode error: ")
+    assert(byOffset(4).getAs[String]("error") === "json decode error:    ")
+    assert(byOffset.forall(r => r.isNullAt(r.fieldIndex("decoded")) ==
+      (r.getAs[String]("error") != null)))
     // every row keeps value IS NULL XOR error IS NULL
     assert(byOffset.forall(r => r.isNullAt(r.fieldIndex("value")) !=
       r.isNullAt(r.fieldIndex("error"))))
     // decode never drops rows (errors-as-data)
-    assert(dec.count() === 3)
+    assert(dec.count() === 5)
   }
 
   test("kafka option builder rejects empty positional args") {

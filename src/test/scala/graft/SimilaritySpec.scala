@@ -368,21 +368,6 @@ class SimilaritySpec extends SparkSpec {
       s"norm ratios too dispersed: ${inBand / ratios.length} in [0.3, 2]")
   }
 
-  test("persisted IVF index: search == in-memory; scan prunes partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_idx").toString
-    Similarity.writeIvfIndex(emb, dir)
-    val qs = emb.filter(col("vec_id") % 100 === 0)
-    val fromIdx = Similarity.ivfSearchFromIndex(spark, dir, emb, qs)
-    val mem = Similarity.ivfSearch(emb, qs)
-    assert(fromIdx.collect().map(_.toSeq).toSet ===
-      mem.collect().map(_.toSeq).toSet)
-    // the 100 TB claim, made visible: the probed cells are PARTITION
-    // filters on the index scan — unprobed cells are never even listed
-    val p = fromIdx.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
-    assert(p.contains("PartitionFilters: [cell"), p)
-  }
-
   test("centroid outliers: planted far vector ranks first for its label") {
     import spark.implicits._
     // 9 near-origin vectors + 1 planted far outlier per label

@@ -257,61 +257,4 @@ class StreamingSpec extends SparkSpec {
     assert(t.count() > 0)
     assert(t.filter(col("value").isNull === col("error").isNull).count() === 0)
   }
-
-  test("foreachBatch incremental dedup against the persisted index == " +
-      "batch verdicts") {
-    import spark.implicits._
-    implicit val sqlCtx = classic.sqlContext
-    val base = "alpha beta gamma delta epsilon zeta eta theta " +
-      "iota kappa lambda mu nu xi omicron pi"
-    val existing = Seq(
-      (100L, base),
-      (101L, "completely different content about rivers and mountains " +
-        "flowing north under bright cold skies every winter morning")
-    ).toDF("doc_id", "text")
-    // the index is built ONCE over the corpus; every micro-batch of the
-    // arriving stream dedups against the on-disk keys — the deployment
-    // shape of incremental ingest (corpus never re-read, no stream state)
-    val idx = java.nio.file.Files
-      .createTempDirectory("stream_dedup_idx").toString
-    graft.operators.Dedup.writeDedupIndex(existing, idx)
-
-    val arrivals = Seq(
-      (1L, base),                                   // exact dup
-      (2L, base.replace(" pi", " rho")),            // near dup (band hit)
-      (3L, "quick brown foxes jump over lazy dogs while autumn " +
-        "leaves fall gently onto quiet empty village streets"))
-    val batchVerdicts = graft.operators.Dedup
-      .incrementalDedupIndexed(spark, arrivals.toDF("doc_id", "text"), idx)
-      .collect()
-      .map(r => r.getLong(0) ->
-        ((r.getBoolean(1), Option(r.getString(2))))).toMap
-
-    val mem = MemoryStream[(Long, String)]
-    val got = scala.collection.mutable.Map[Long, (Boolean, Option[String])]()
-    val q = mem.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.operators.Dedup
-          .incrementalDedupIndexed(batch.sparkSession, batch, idx)
-          .collect().foreach { r =>
-            got.synchronized {
-              got(r.getLong(0)) =
-                (r.getBoolean(1), Option(r.getString(2)))
-            }
-          }
-      }
-      .start()
-    try {
-      // two micro-batches: the near dup arrives separately from the rest
-      mem.addData(arrivals(0), arrivals(2))
-      q.processAllAvailable()
-      mem.addData(arrivals(1))
-      q.processAllAvailable()
-    } finally q.stop()
-
-    assert(got.toMap === batchVerdicts)
-    assert(got(1L) === ((true, Some("exact"))))
-    assert(got(2L) === ((true, Some("near"))))
-    assert(got(3L) === ((false, None)))
-  }
 }
