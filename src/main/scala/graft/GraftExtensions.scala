@@ -3,6 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning,
+  SinglePartition}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS,
+  ShuffleExchangeExec}
+import org.apache.spark.sql.internal.SQLConf
 
 import graft.functions._
 
@@ -33,12 +40,19 @@ import graft.functions._
   * this, and every write task and parquet scan broadcast then carries
   * about 1.1k gzipped lists (112 KB per serialized conf, against 68 KB
   * without them).
-  * No optimizer rules or strategies are injected: SURVEY.md §4.2 found none
-  * needed — every operator composes from built-ins whose plans Catalyst
+  * One physical rule is injected as an AQE query-stage preparation rule,
+  * [[GraftExtensions.SortSmallInputInOnePartition]]: a global sort of an
+  * input that AQE estimates at most
+  * `spark.sql.adaptive.coalescePartitions.minPartitionSize` shuffles to
+  * one partition instead of range partitions, so no job samples the input
+  * for range bounds. No logical rule or strategy is injected (SURVEY.md
+  * §4.2): every operator composes from built-ins whose plans Catalyst
   * already optimizes.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectQueryStagePrepRule(
+      _ => GraftExtensions.SortSmallInputInOnePartition)
     GraftExtensions.builders.foreach { case (name, usage, b) =>
       ext.injectFunction((new FunctionIdentifier(name),
         new ExpressionInfo("graft", null, name, usage, ""), b))
@@ -51,6 +65,43 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+
+  /** Rewrites a global sort's `RangePartitioning(_, n > 1)` exchange to
+    * `SinglePartition` when AQE estimates the exchange's input at most the
+    * floor `spark.sql.adaptive.coalescePartitions.minPartitionSize`.
+    *
+    * A range exchange first runs a job that samples its input for the
+    * partition bounds, and that job recomputes the whole upstream stage.
+    * AQE then coalesces a shuffle that small into one partition anyway, so
+    * the sample buys nothing. The sort still orders every row; only the
+    * exchange's partition count changes.
+    *
+    * The estimate is the logical plan's size, built on the measured size
+    * of every stage that has run. It can be low: a `Generate` is estimated
+    * at its child's size, so a sort right after a large explode can run
+    * in one task where AQE would have split it. A node without a logical
+    * link, an estimate above the floor, a user's `repartitionByRange` (not
+    * ENSURE_REQUIREMENTS) and sessions with partition coalescing off are
+    * left as they are.
+    * Query-stage preparation rules run only under AQE, so streaming
+    * micro-batches (AQE off) never see this rule.
+    */
+  private[graft] object SortSmallInputInOnePartition
+      extends Rule[SparkPlan] {
+    override def apply(plan: SparkPlan): SparkPlan =
+      if (!conf.coalesceShufflePartitionsEnabled) plan
+      else {
+        val floor =
+          conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+        plan.transformUp {
+          case e @ ShuffleExchangeExec(RangePartitioning(_, n), child,
+              ENSURE_REQUIREMENTS, _) if n > 1 &&
+              child.logicalLink.exists(_.stats.sizeInBytes <= floor) =>
+            e.copy(outputPartitioning = SinglePartition)
+        }
+      }
+  }
+
   private[graft] val builders
       : Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("array_dot_product", "_FUNC_(a, b) - left-fold double dot product",
@@ -136,19 +187,5 @@ object GraftExtensions {
             graft.operators.Dedup.minhashPairs(d)
               .select(org.apache.spark.sql.functions.col("a"),
                 org.apache.spark.sql.functions.col("b"))))))
-  }
-
-  /** Register into an already-created session (withExtensions only applies
-    * at session build time).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    builders.foreach { case (name, _, b) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, b, "scala_udf")
-    }
-    tableBuilders.foreach { case (name, _, b) =>
-      spark.sessionState.tableFunctionRegistry
-        .createOrReplaceTempFunction(name, b, "scala_udf")
-    }
   }
 }

@@ -26,6 +26,12 @@ import org.apache.spark.sql.SparkSession
   * stock code, and `.crc` files and Spark's `FileContext` checkpoint
   * manager stay. HDFS and object stores are untouched. Deployments that
   * install only [[GraftExtensions]] pass both confs on submit.
+  *
+  * Every session built here carries [[GraftExtensions]]: the native SQL
+  * functions, the table functions (`kafka_consumer`, the corpus TVFs) and
+  * the AQE rule that sorts a small input in one partition. Extensions
+  * apply only when `getOrCreate` builds the session; a session that
+  * already exists is returned as it is.
   */
 object GraftSession {
 
@@ -71,6 +77,7 @@ object GraftSession {
         classOf[graft.io.ForkFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         classOf[graft.io.ForkFreeLocalFs].getName)
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     dropHadoopConfSources(spark)

@@ -19,6 +19,15 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType}
   * schema: a long `ts` is a nanos fixture and gets floor-divided back to
   * microsecond TIMESTAMP_NTZ (matching DuckDB's nanos→micros truncation);
   * a timestamp `ts` passes through.
+  *
+  * A loaded table is a per-session snapshot, as a catalog table is: the
+  * first [[load]] of `dir/name.parquet` in a session lists its files and
+  * infers its schema (one Spark job), and every later load returns that
+  * same DataFrame, so files written to the path afterwards are not seen.
+  * The memo is [[graft.queries.Shared]]'s, keyed by application and
+  * evicted at application end; a second session of the same application
+  * reads the path afresh, so a query never runs under another session's
+  * conf.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -26,6 +35,13 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val df = graft.queries.Shared.memo(spark, dir, s"table:$name")(_ =>
+      read(spark, dir, name))
+    if (df.sparkSession eq spark) df else read(spark, dir, name)
+  }
+
+  private def read(spark: SparkSession, dir: String, name: String)
+      : DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     df.schema.fields.foldLeft(df) { (d, f) =>
       if (f.name == "ts" && f.dataType == LongType)

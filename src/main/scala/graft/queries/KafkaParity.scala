@@ -138,7 +138,6 @@ object KafkaParity {
     // cpp:126,226-227) driven end-to-end via spark.sql and certified by
     // an oracle over the restricted relation.
     "k04_partition_pruned" -> { (s, dir) =>
-      graft.GraftExtensions.register(s)
       s.conf.set(KafkaSource.ReplayConfKey, dir)
       s.sql("""SELECT * FROM kafka_consumer(
           'localhost:9092', 'events', 'grp', partitions => '0,3')""")
@@ -191,7 +190,6 @@ object KafkaParity {
     // (startingTimestamp/endingTimestamp), the second pushdown the
     // reference declines; inclusive-exclusive range.
     "k05_time_pruned" -> { (s, dir) =>
-      graft.GraftExtensions.register(s)
       s.conf.set(KafkaSource.ReplayConfKey, dir)
       s.sql("""SELECT * FROM kafka_consumer(
           'localhost:9092', 'events', 'grp',

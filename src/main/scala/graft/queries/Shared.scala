@@ -26,7 +26,8 @@ import graft.operators.{Dedup, Graph}
   * Memoization is keyed by (applicationId, corpus dir): a new context (or
   * a different scale factor) rebuilds; a stopped context's entries and
   * temp pair-index dirs are evicted/deleted by an application-end
-  * listener (see [[ensureCleanup]]).
+  * listener (see [[ensureCleanup]]). [[Tables.load]] memoizes each loaded
+  * fixture table here too.
   */
 private[graft] object Shared {
 
@@ -145,7 +146,7 @@ private[graft] object Shared {
     * building the same deterministic artifact, first put wins) is the
     * correct trade on a single driver.
     */
-  private def memo(s: SparkSession, dir: String, key: String)
+  private[graft] def memo(s: SparkSession, dir: String, key: String)
       (build: String => DataFrame): DataFrame = {
     val app = ensureCleanup(s)
     val k = (app, dir, key)

@@ -318,26 +318,6 @@ object KafkaSource {
     df.queryExecution.logical
   }
 
-  /** Typed view of any 7-column kafka_consumer relation, for consumers who
-    * want compile-time field checks (SURVEY.md §1.3). Normalizes the
-    * timestamp by its actual type: NTZ → LTZ value-preserving under the
-    * UTC session; epoch-ms longs (the Kafka wire domain, cpp:175-176) via
-    * timestamp_millis — a bare cast would mis-read them as epoch-seconds.
-    */
-  def typed(records: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.Dataset[KafkaRecord] = {
-    import org.apache.spark.sql.Encoders
-    val tsType = records.schema("timestamp").dataType
-    val normalized = tsType match {
-      case org.apache.spark.sql.types.LongType =>
-        records.withColumn("timestamp", timestamp_millis(col("timestamp")))
-      case org.apache.spark.sql.types.TimestampType => records
-      case _ =>
-        records.withColumn("timestamp", col("timestamp").cast("timestamp"))
-    }
-    normalized.as[KafkaRecord](Encoders.product[KafkaRecord])
-  }
-
   // ---------------------------------------------------------------------
   // FileReplaySource: the events fixture projected into the exact 7-column
   // kafka_consumer shape, so the whole downstream surface is testable with

@@ -180,14 +180,6 @@ class DedupSpec extends SparkSpec {
     assert(ivfM._1 > 0 && ivfM._2 > 0, s"ivf $ivfM")
   }
 
-  test("typed KafkaRecord dataset roundtrips the replay") {
-    val ds = graft.sources.KafkaSource.typed(
-      graft.sources.KafkaSource.replay(Tables.load(spark, sf, "events")))
-    val r = ds.filter((k: graft.sources.KafkaRecord) => k.error != null)
-    assert(r.count() > 0)
-    assert(ds.count() === Tables.load(spark, sf, "events").count())
-  }
-
   test("duplicated spans: partial, internal, adjacent-fused, keep-first") {
     import spark.implicits._
     val S = (1 to 10).map("s" + _).mkString(" ") // 10 tokens, 3 8-grams

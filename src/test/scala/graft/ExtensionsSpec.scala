@@ -7,7 +7,6 @@ import graft.operators.Multimodal
 class ExtensionsSpec extends SparkSpec {
 
   test("native functions are callable from SQL after registration") {
-    GraftExtensions.register(spark)
     val r = spark.sql("""
       SELECT array_dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d,
              simhash60('the quick brown fox') AS sh,
@@ -30,7 +29,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("SQL minhash matches the Column-API minhash") {
-    GraftExtensions.register(spark)
     val docs = Tables.load(spark, sf, "documents").limit(50)
     docs.createOrReplaceTempView("docs_ext")
     val viaSql = spark.sql(
@@ -67,7 +65,6 @@ class ExtensionsSpec extends SparkSpec {
 
   test("corpus TVFs: SQL minhash_pairs/doc_quality/dedup_corpus match " +
       "the Scala operators; bind errors are loud") {
-    GraftExtensions.register(spark)
     val path = s"$sf/documents.parquet"
     val docs = spark.read.parquet(path)
     val sqlPairs = spark.sql(s"SELECT * FROM minhash_pairs('$path')")

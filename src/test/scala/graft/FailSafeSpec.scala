@@ -94,14 +94,18 @@ class FailSafeSpec extends SparkSpec {
         .map(f => f -> new String(Files.readAllBytes(f), UTF_8))
     }
     // literals are matched so that a "//" or "/*" inside one opens no
-    // comment; comments are blanked, literals kept (a name spliced into an
-    // interpolated string is a real call)
+    // comment; comments and literal text are blanked, `${…}` splices kept
+    // (a name spliced into an interpolated string is a real call, a word
+    // in oracle SQL is not)
     val lexeme = ("""(?:"{3}[\s\S]*?"{3}|"(?:[^"\\\n]|\\.)*"|""" +
       """'(?:[^'\\\n]|\\.)'|//[^\n]*|/\*[\s\S]*?\*/)""").r
+    val spliceOrChar = """\$\{[^}]*\}|[^\n]""".r
     def code(src: String): String = lexeme.replaceAllIn(src, m =>
       scala.util.matching.Regex.quoteReplacement(
         if (m.matched.startsWith("/")) m.matched.replaceAll("[^\n]", "")
-        else m.matched))
+        else spliceOrChar.replaceAllIn(m.matched, c =>
+          scala.util.matching.Regex.quoteReplacement(
+            if (c.matched.length > 1) c.matched else " "))))
     def counts(it: Iterator[String]): Map[String, Int] =
       it.toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
     val main = (sources("src/main/scala") ++ sources("perfbench/src"))

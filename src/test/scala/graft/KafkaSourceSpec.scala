@@ -147,7 +147,6 @@ class KafkaSourceSpec extends SparkSpec {
     * production path).
     */
   test("SQL kafka_consumer(...) resolves and scans the 7-col relation") {
-    GraftExtensions.register(spark)
     spark.conf.set(KafkaSource.ReplayConfKey, sf)
     try {
       val df = spark.sql(
@@ -181,7 +180,6 @@ class KafkaSourceSpec extends SparkSpec {
 
     // SQL surface: partitions => '0,3' restricts the replay relation to
     // exactly those partition ids, same pruning semantics as assign
-    GraftExtensions.register(spark)
     spark.conf.set(KafkaSource.ReplayConfKey, sf)
     try {
       val pruned = spark.sql("""SELECT * FROM kafka_consumer(
@@ -197,7 +195,6 @@ class KafkaSourceSpec extends SparkSpec {
   }
 
   test("start_ts/end_ts prune the scan to the half-open time range") {
-    GraftExtensions.register(spark)
     spark.conf.set(KafkaSource.ReplayConfKey, sf)
     try {
       val pruned = spark.sql("""SELECT * FROM kafka_consumer(
@@ -232,7 +229,6 @@ class KafkaSourceSpec extends SparkSpec {
     * the consumer, then query the view — 1:1 through spark.sql.
     */
   test("CREATE VIEW over kafka_consumer matches the reference view flow") {
-    GraftExtensions.register(spark)
     spark.conf.set(KafkaSource.ReplayConfKey, sf)
     try {
       spark.sql("""CREATE OR REPLACE TEMPORARY VIEW kafka_messages AS
@@ -248,7 +244,6 @@ class KafkaSourceSpec extends SparkSpec {
   }
 
   test("SQL kafka_consumer reproduces the reference bind-error surface") {
-    GraftExtensions.register(spark)
     spark.conf.set(KafkaSource.ReplayConfKey, sf)
     try {
       def err(sql: String): String =
