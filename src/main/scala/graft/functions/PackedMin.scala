@@ -30,7 +30,10 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * values — because both halves are independent non-negative 31-bit
   * lanes: the hi lane's min never borrows from or carries into the lo
   * lane. NULL inputs fold as the neutral element (both lanes at
-  * 2^31 − 1, the register-domain maximum).
+  * 2^31 − 1, the register-domain maximum). Since each lane only ever
+  * lowers, the sum of both unpacked lanes over a row's columns drops
+  * exactly when some register did — the test `reachSketch`'s
+  * changed-set rule applies to packed rows.
   */
 case class PackedMin2(child: Expression)
     extends DeclarativeAggregate with UnaryLike[Expression] {

@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType,
-  StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField,
+  StructType}
 
 /** Graph analytics over relational edge tables. PageRank-style centrality
   * is a standard pretraining-data quality signal (host/domain importance
@@ -462,18 +462,18 @@ object Graph {
     *   - sf1  (178 MB input, E=12M):  cut 13.81 s vs NO-cut 5.05 s (2.7×)
     *
     * — per-hop fixed cost dominates hop compute through at least a
-    * decade of scale. The default threshold keeps checkpoints ON from
-    * ~1 GiB of input up (multi-TB production graphs, where re-executing
-    * a hop join is minutes and materializing V rows is not), and the
-    * caller's `deltaOnly` mode always forces them (the changed-set diff
-    * re-reads each hop's table — [[reachSketch]]'s own require). Output
-    * is invariant either way — the checkpoint is a lineage boundary,
-    * never a semantic. An input of unknown size
+    * decade of scale. Checkpoints stay ON from [[HopCheckpointBytes]] of
+    * input up (multi-TB production graphs, where re-executing a hop join
+    * is minutes and materializing V rows is not). Output is invariant
+    * either way — the checkpoint is a lineage boundary, never a
+    * semantic. An input of unknown size
     * ([[graft.streaming.StreamOps.UnknownBytes]]) keeps checkpoints on.
     */
-  def adaptiveHopCheckpoint(inputBytes: Long,
-      thresholdBytes: Long = 1L << 30): Boolean =
-    inputBytes > thresholdBytes
+  def adaptiveHopCheckpoint(inputBytes: Long): Boolean =
+    inputBytes > HopCheckpointBytes
+
+  /** Input size from which [[adaptiveHopCheckpoint]] cuts every hop. */
+  private val HopCheckpointBytes = 1L << 30
 
   /** Widest seed set [[kHopCountsBitset]] runs as bitsets: 64 words. */
   val MaxBitsetSeeds = 4096
@@ -506,13 +506,15 @@ object Graph {
     * counted — Round15Spec asserts equality on the spec fixture and the
     * sf0.001 order graph; the g07/g08/g18 oracles certify it end-to-end.
     *
-    * `edgesDeduped = true` skips the defensive distinct for callers
-    * (Shared.orderGraphEdges) whose edge set is already DISTINCT and
-    * checkpointed — re-deduping a proven-distinct 100 TB edge table is a
-    * wasted shuffle (the [[reachSketch]] contract).
+    * Only CHANGED nodes enter each hop's join, the changed-set rule
+    * [[reachSketch]] shares (HyperBall, Boldi & Vigna): OR is idempotent,
+    * and a node unchanged since hop j was merged into all its
+    * out-neighbors at hop j+1, so bits still arrive exactly one hop after
+    * their source gains them. The merge yields the set for free: rows
+    * whose new bits `merged & ~previous` are nonzero. Edges are taken as
+    * given (a duplicate never changes a mask); every hop's merge is cut.
     */
-  def kHopCountsBitset(edges: DataFrame, seeds: DataFrame, k: Int = 3,
-      edgesDeduped: Boolean = false, checkpoint: Boolean = true)
+  def kHopCountsBitset(edges: DataFrame, seeds: DataFrame, k: Int = 3)
       : DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = edges.sparkSession
@@ -537,14 +539,7 @@ object Graph {
         .select(col("seed").cast("long").as("seed"), col("dist"),
           col("n_nodes"))
     val nW = (seedArr.length + 63) >>> 6
-    // checkpoint=false fuses the whole k-hop chain into one plan —
-    // read-offs re-execute shared hop prefixes, the right trade exactly
-    // when [[adaptiveHopCheckpoint]] says per-hop job overhead dominates
-    // hop compute (output invariant either way).
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint(false) else df
-    val e = if (edgesDeduped) edges.select(col("src"), col("dst"))
-      else cut(edges.select(col("src"), col("dst")).distinct())
+    val e = edges.select(col("src"), col("dst"))
     import spark.implicits._
     // driver-local relation (the collected seed set) — no cut needed
     val seedBits = seedArr.zipWithIndex.toSeq.toDF("seed", "bit")
@@ -555,12 +550,7 @@ object Graph {
         s"CASE WHEN bit >= ${i * 64} AND bit < ${(i + 1) * 64} " +
         s"THEN shiftleft(CAST(1 AS BIGINT), CAST(bit % 64 AS INT)) " +
         s"ELSE CAST(0 AS BIGINT) END").as(s"w$i")): _*)
-    // only CHANGED nodes enter the hop join (the [[reachSketch]] delta
-    // argument, g22-certified shape): OR is idempotent, and a node whose
-    // mask changed at hop j propagates its full mask at hop j+1, so a
-    // node unchanged since hop j has already been merged into all its
-    // out-neighbors — bits still arrive exactly one hop after their
-    // source gains them, which is what keeps the BFS distances exact.
+    // hop 0: every seed's mask is new (the changed-set rule, scaladoc)
     var changed = ball
     val perHop = (1 to k).map { d =>
       // candidate mask per dst: OR of in-neighbors' current balls — the
@@ -571,7 +561,7 @@ object Graph {
         .agg(expr("bit_or(w0)").as("w0"),
           (1 until nW).map(i => expr(s"bit_or(w$i)").as(s"w$i")): _*)
       // merge with the previous ball; new bits = candidate & ~previous
-      val merged = cut(
+      val merged =
         ball.as("b").join(orM.as("o"), Seq("node"), "full_outer")
           .select(col("node") +:
             ((0 until nW).map(i => expr(
@@ -579,11 +569,12 @@ object Graph {
                 s"coalesce(o.w$i, CAST(0 AS BIGINT))").as(s"w$i")) ++
              (0 until nW).map(i => expr(
                 s"coalesce(o.w$i, CAST(0 AS BIGINT)) & " +
-                s"~coalesce(b.w$i, CAST(0 AS BIGINT))").as(s"n$i"))): _*))
+                s"~coalesce(b.w$i, CAST(0 AS BIGINT))").as(s"n$i"))): _*)
+          .localCheckpoint(false)
       ball = merged.select(col("node") +: ws: _*)
-      changed = merged
-        .filter((0 until nW).map(i => col(s"n$i") =!= 0L).reduce(_ || _))
-        .select(col("node") +: ws: _*)
+      val grown =
+        merged.filter((0 until nW).map(i => col(s"n$i") =!= 0L).reduce(_ || _))
+      changed = grown.select(col("node") +: ws: _*)
       // per-seed counts of this hop's newly-set bits: set-bit explode of
       // the (node-sized) new masks, then bit → seed via the index table
       val newWords = (0 until nW).map(i => s"n$i").mkString(",")
@@ -592,9 +583,7 @@ object Graph {
         s"transform(sequence(0, 63), j -> CASE WHEN " +
         s"(shiftright(element_at(array($newWords), i + 1), j) & 1) = 1 " +
         s"THEN i * 64 + j ELSE -1 END))), x -> x >= 0)"
-      merged
-        .filter((0 until nW).map(i => col(s"n$i") =!= 0L).reduce(_ || _))
-        .select(explode(expr(bitsOf)).as("bit"))
+      grown.select(explode(expr(bitsOf)).as("bit"))
         .groupBy(col("bit")).agg(count(lit(1)).as("n_nodes"))
         .join(broadcast(seedBits), "bit")
         .select(col("seed"), lit(d).as("dist"), col("n_nodes"))
@@ -630,6 +619,15 @@ object Graph {
     * independent of seed count and frontier volume — you get EVERY node's
     * reach profile for the cost of one, with no all-pairs stage anywhere.
     *
+    * With per-hop checkpoints only CHANGED rows enter a hop's edge join,
+    * [[kHopCountsBitset]]'s rule: min is idempotent, so a row unchanged
+    * since hop j already reached its in-neighbors at hop j+1. The merge
+    * yields the set: it carries `max(prev)`, the sum of the node's own
+    * registers (NULL on neighbor rows), and as min only lowers them, a
+    * row changed exactly when its merged sum is below `prev`. (An EXCEPT
+    * of the register tables per hop cost 182.7 s vs 96.7 s full hops at
+    * sf10.) Duplicate edges change nothing.
+    *
     * Output: (seed, dist, est_reach) for dist in 1..k, est_reach the
     * rounded ball-size estimate (seed itself included, matching
     * 1 + Σ n_nodes of [[kHopCounts]]).
@@ -651,33 +649,20 @@ object Graph {
     * approach H/n resolution — irrelevant below ~10^7 reach at 2^31).
     */
   def reachSketch(edges: DataFrame, seeds: DataFrame, k: Int = 3,
-      m: Int = 64, edgesDeduped: Boolean = false,
-      checkpoint: Boolean = true, intRegisters: Boolean = false,
-      deltaOnly: Boolean = false, deltaActivation: Double = 0.02,
-      changedCounts: Option[scala.collection.mutable.Buffer[Long]] = None)
-      : DataFrame = {
+      m: Int = 64, checkpoint: Boolean = true,
+      intRegisters: Boolean = false): DataFrame = {
     require(k >= 1 && m >= 1, s"k and m must be >= 1, got k=$k m=$m")
     require(!intRegisters || m % 2 == 0,
       s"intRegisters packs register pairs, so m must be even, got m=$m")
-    require(!deltaOnly || checkpoint,
-      "deltaOnly re-reads each hop's register table (the merge AND the " +
-        "changed-set diff) — without per-hop checkpoints the k-deep " +
-        "lineage re-executes per consumer")
     // hash range: 2^40 (LONG registers) or 2^31 (INT); sums of m mins of
     // either width fit a long
     val H = if (intRegisters) 2147483648L else 1099511627776L
-    // checkpoint=false keeps the whole k-hop lineage in ONE logical plan
-    // (no LogicalRDD boundaries) so PlanSpec can gate the hop aggregate's
-    // physical shape; production keeps the per-hop checkpoints — constant
-    // lineage depth, and each hop's result is reused by hop d+1 AND the
-    // seed read-off without re-execution.
+    // per-hop cuts: constant lineage depth, and hop d's table feeds hop
+    // d+1 AND its read-off without re-execution; checkpoint=false fuses
+    // the k hops into one plan ([[adaptiveHopCheckpoint]] says when)
     def cut(df: DataFrame): DataFrame =
       if (checkpoint) df.localCheckpoint(false) else df
-    // edgesDeduped: Shared.orderGraphEdges is already DISTINCT and
-    // localCheckpointed — re-deduping the 100 TB edge table to protect
-    // against duplicates the caller proved absent is a wasted shuffle.
-    val e = if (edgesDeduped) edges.select(col("src"), col("dst"))
-      else cut(edges.select(col("src"), col("dst")).distinct())
+    val e = edges.select(col("src"), col("dst"))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     // Register state lives as m LONG COLUMNS on one row per node — the
@@ -711,86 +696,35 @@ object Graph {
       else (0 until m).map(j => hashReg(j).as(s"r$j"))
     val minFn: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
       if (intRegisters) graft.functions.PackedMin2.packedMin2 else min
-    var regs = cut(nodes.select(col("node") +: regCols: _*))
     val rs = (0 until nCols).map(j => col(s"r$j"))
-    // deltaOnly (the HyperBall "systolic" lever, Boldi/Rosa/Vigna §4):
-    // in late hops most balls have converged, so propagating EVERY
-    // node's registers re-ships E·m bytes for neighbors that can no
-    // longer contribute — min is idempotent, and a node unchanged since
-    // hop j was already merged into all its out-neighbors at hop j+1,
-    // so only nodes whose register row CHANGED last hop need to enter
-    // the edge join. Register values stay BIT-IDENTICAL (g22 certifies
-    // against g20/g21's shared oracle); only the hop join's input
-    // shrinks, from V rows to |changed| rows. The changed set itself is
-    // an except() over the node-sized register tables — one V-row
-    // shuffle per hop, paid to shrink the E-row join, the right trade
-    // whenever E >> V (this graph: E ≈ 13×V) and balls converge early.
-    var changed = regs // hop 0: every node's row is new
-    // Delta (systolic) mode is ADAPTIVE, the HyperBall shape: while the
-    // balls are still growing fast, a full hop is cheaper than paying a
-    // per-hop changed-set diff on ~every row, so the loop runs FULL hops
-    // and watches one cheap convergence scalar — the global register
-    // sum, a V-row map-side aggregate. Min-merge only ever lowers
-    // registers, so the scalar is non-increasing, and its RELATIVE drop
-    // bounds how much ball growth the hop bought. Once the drop falls to
-    // `deltaActivation` (or a hop leaves it unchanged), the loop
-    // switches — stickily — to systolic mode: compute the changed set
-    // (merged EXCEPT prev — a node-sized shuffle, now paid only near
-    // convergence), join only changed rows into later hops, and once the
-    // set is EMPTY stop joining entirely and re-read the stable table
-    // per remaining dist (HyperBall's termination rule). The heuristic
-    // can only mistime the SWITCH, never the values: propagating a
-    // superset of the changed rows is always correct (min is
-    // idempotent), so the output is bit-identical to the full recompute
-    // at any threshold — deltaActivation >= 1.0 forces systolic from
-    // hop 1 (the spec's mechanism probe), 0.0 disables it (pure full
-    // hops + early-stop never triggers).
-    var deltaActive = deltaOnly && deltaActivation >= 1.0
-    var converged = false
-    var prevTotal: Option[java.math.BigDecimal] = None
     val ssum =
       if (intRegisters)
         // unpack both 31-bit lanes; m mins of < 2^31 total < 2^37
         rs.map(c => shiftrightunsigned(c, 32) +
           c.bitwiseAND(lit(0x7FFFFFFFL))).reduce(_ + _)
       else rs.reduce(_ + _)
-    def readOff(d: Int): DataFrame =
+    var regs = cut(nodes.select(col("node") +: regCols: _*))
+    var changed = regs // hop 0: every node's row is new
+    val perHop = (1 to k).map { d =>
+      val fromNbr = e.join(changed, col("dst") === col("node"))
+        .select(col("src").as("node") +: rs :+
+          lit(null).cast(LongType).as("prev"): _*)
+      val merged = cut(regs.select(col("node") +: rs :+ ssum.as("prev"): _*)
+        .unionByName(fromNbr)
+        .groupBy(col("node"))
+        .agg(minFn(col("r0")).as("r0"),
+          (1 until nCols).map(j => minFn(col(s"r$j")).as(s"r$j")) :+
+            max(col("prev")).as("prev"): _*))
+      regs = merged.select(col("node") +: rs: _*)
+      // Fused hops join every row: there a filtered read of the previous
+      // hop is a second copy of the hop chain that prunes `prev` apart
+      // from the plain read, so exchange reuse no longer shares the two
+      // (g20 1.57 -> 8.61 s at sf0.1 with the filter).
+      changed = if (!checkpoint) regs
+        else merged.filter(ssum < col("prev")).select(col("node") +: rs: _*)
       regs.join(broadcast(seeds.select(col("seed"))),
           col("node") === col("seed"))
         .select(col("seed"), lit(d).as("dist"), ssum.as("ssum"))
-    val perHop = (1 to k).map { d =>
-      if (converged) readOff(d)
-      else {
-        val fromNbr = e.join(if (deltaActive) changed else regs,
-            col("dst") === col("node"))
-          .select(col("src").as("node") +: rs: _*)
-        val merged = cut(regs.unionByName(fromNbr)
-          .groupBy(col("node"))
-          .agg(minFn(col("r0")).as("r0"),
-            (1 until nCols).map(j => minFn(col(s"r$j")).as(s"r$j")): _*))
-        if (deltaOnly && d < k) {
-          if (!deltaActive && deltaActivation > 0.0) {
-            // V·m sums can pass 2^63 at the LONG register width — the
-            // scalar rides DECIMAL(38,0), exact and cheap at one row
-            val total = merged
-              .agg(sum(ssum.cast(DecimalType(38, 0))).as("t"))
-              .collect()(0).getDecimal(0)
-            deltaActive = prevTotal.exists { p =>
-              p.subtract(total).compareTo(p.multiply(
-                java.math.BigDecimal.valueOf(deltaActivation))) <= 0
-            }
-            prevTotal = Some(total)
-          }
-          if (deltaActive) {
-            changed = cut(merged.except(regs))
-            val n = changed.count()
-            changedCounts.foreach(_ += n)
-            converged = n == 0L
-          }
-        }
-        regs = merged
-        readOff(d)
-      }
     }
     perHop.reduce(_ unionByName _)
       .select(col("seed"), col("dist"),

@@ -191,18 +191,17 @@ object Extras10 {
     "k34_interval_join_right" -> { (s, dir) => mirrorOuterReplay(s, dir) },
 
     // The k=10 reach sketch (VERDICT r13 item 5): the grain where the
-    // adaptive systolic lever actually FIRES — the order graph's
-    // effective diameter is ~5 hops, so the register-sum drop flattens
-    // mid-loop, the changed-set diff activates, empties, and hops past
-    // convergence become read-offs. Register values stay bit-identical
-    // to the full recompute (min is idempotent); the oracle extends the
-    // g20/g21 grid to 10 levels via a bounded recursive BFS.
+    // changed-set rule pays — the order graph's effective diameter is ~5
+    // hops, so the changed set shrinks, empties, and hops past
+    // convergence join an empty set. Register values stay bit-identical
+    // to propagating every row (min is idempotent); the oracle extends
+    // the g20/g21 grid to 10 levels via a bounded recursive BFS. Hops
+    // are always cut here: each hop reads the previous merge twice, so a
+    // fused plan holds 2^k copies of hop 1 — fine at g20/g21's k=3,
+    // not at k=10.
     "g23_reach_sketch_k10" -> { (s, dir) =>
-      val e = Shared.orderGraphEdges(s, dir)
-      val seeds = e.select(col("src").as("seed")).distinct()
-        .filter(col("seed") < 1000000 && col("seed") % 100 === 0)
-      Graph.reachSketch(e, seeds, k = 10, m = 64, edgesDeduped = true,
-        intRegisters = true, deltaOnly = true)
+      Graph.reachSketch(Shared.orderGraphEdges(s, dir),
+        Shared.orderGraphSeeds(s, dir), k = 10, m = 64, intRegisters = true)
     })
 
   /** The g20/g21 register-grid oracle generalized to 10 distance levels:

@@ -307,22 +307,19 @@ object Extras6 {
     // Sketch-based reach profile (VERDICT r9 item 2): the HyperANF-style
     // register-propagation twin of the exact 3-hop BFS (g07/g08/g18's
     // shared khop3 artifact, the suite's only ~SF^1.9 path). O(E·m) per
-    // hop, state V·m longs, no frontier anywhere; the oracle builds the
-    // IDENTICAL register grid from the exact ball membership, so the
-    // estimate strict-certifies. Calibration vs the exact counts is
-    // gated in Round10Spec.
+    // hop, state V·m longs, no frontier anywhere; with per-hop
+    // checkpoints only rows that changed at the previous hop enter a
+    // hop's edge join (the bitset BFS's changed-set rule). The oracle
+    // builds the IDENTICAL register grid from the exact ball
+    // membership, so the estimate strict-certifies.
+    // Calibration vs the exact counts is gated in Round10Spec.
     "g20_reach_sketch" -> { (s, dir) =>
-      val e = Shared.orderGraphEdges(s, dir)
-      val seeds = e.select(col("src").as("seed")).distinct()
-        .filter(col("seed") < 1000000 && col("seed") % 100 === 0)
       // per-hop checkpoints follow input size (adaptiveHopCheckpoint
       // scaladoc: cut 4.9 s vs fused 2.1 s at sf0.1, same 2.7× at sf1;
       // multi-GB graphs keep the constant-lineage checkpoints)
-      Graph.reachSketch(e, seeds, k = 3, m = 64, edgesDeduped = true,
-        checkpoint = Graph.adaptiveHopCheckpoint(
-          graft.streaming.StreamOps.pathBytes(
-            java.nio.file.Paths.get(dir, "orders.parquet"),
-            java.nio.file.Paths.get(dir, "lineitem.parquet"))))
+      Graph.reachSketch(Shared.orderGraphEdges(s, dir),
+        Shared.orderGraphSeeds(s, dir), k = 3, m = 64,
+        checkpoint = Graph.adaptiveHopCheckpoint(Shared.orderGraphBytes(dir)))
     })
 
   /** The k20-family cutoff model as a shared DuckDB CTE prefix (ADVICE

@@ -115,18 +115,12 @@ object Extras7 {
     // page-cache cliff. Same seeds, same m, same estimator; the oracle
     // builds the identical 2^31 grid from the exact ball membership.
     "g21_reach_sketch_int" -> { (s, dir) =>
-      val e = Shared.orderGraphEdges(s, dir)
-      val seeds = e.select(col("src").as("seed")).distinct()
-        .filter(col("seed") < 1000000 && col("seed") % 100 === 0)
       // per-hop checkpoints follow input size — see g20 / the
       // adaptiveHopCheckpoint scaladoc (3.37 s cut vs 2.14 s fused at
       // sf0.1, same shape at sf1)
-      Graph.reachSketch(e, seeds, k = 3, m = 64, edgesDeduped = true,
-        intRegisters = true,
-        checkpoint = Graph.adaptiveHopCheckpoint(
-          graft.streaming.StreamOps.pathBytes(
-            java.nio.file.Paths.get(dir, "orders.parquet"),
-            java.nio.file.Paths.get(dir, "lineitem.parquet"))))
+      Graph.reachSketch(Shared.orderGraphEdges(s, dir),
+        Shared.orderGraphSeeds(s, dir), k = 3, m = 64, intRegisters = true,
+        checkpoint = Graph.adaptiveHopCheckpoint(Shared.orderGraphBytes(dir)))
     },
 
     // transformWithState under the oracle gate (VERDICT r10 item 4):

@@ -142,20 +142,17 @@ object Extras9 {
       Extras6.intervalJoinReplay(s, dir, joinType = "full_outer")._1 },
 
     // Changed-registers-only reach propagation (VERDICT r12 item 4):
-    // g21's INT-packed register grid with the HyperBall systolic
-    // optimization — hop d's edge join takes only nodes whose register
-    // row changed at hop d−1 (min is idempotent: an unchanged neighbor
-    // was already merged into every out-neighbor the hop after it last
-    // changed, so skipping it loses nothing). Register values are
-    // BIT-IDENTICAL to g21's, so this certifies against g21's oracle
-    // verbatim; Round13Spec carries the shrinking-changed-set and
-    // hop-input accounting the CORRECTNESS row can't show.
+    // hop d's edge join takes only nodes whose register row changed at
+    // hop d−1 (min is idempotent: an unchanged neighbor was already
+    // merged into every in-neighbor the hop after it last changed). It
+    // was a mode of g21's grid behind a per-hop driver-side switch; the
+    // changed set now comes free from the merge wherever hops are
+    // checkpointed, so g22 is g21's exact call, certified by g21's
+    // oracle verbatim.
     "g22_reach_sketch_delta" -> { (s, dir) =>
-      val e = Shared.orderGraphEdges(s, dir)
-      val seeds = e.select(col("src").as("seed")).distinct()
-        .filter(col("seed") < 1000000 && col("seed") % 100 === 0)
-      Graph.reachSketch(e, seeds, k = 3, m = 64, edgesDeduped = true,
-        intRegisters = true, deltaOnly = true)
+      Graph.reachSketch(Shared.orderGraphEdges(s, dir),
+        Shared.orderGraphSeeds(s, dir), k = 3, m = 64, intRegisters = true,
+        checkpoint = Graph.adaptiveHopCheckpoint(Shared.orderGraphBytes(dir)))
     })
 
   /** The unmatched-LEFT null-pad rule shared by k28/k30 (interpolated on

@@ -257,6 +257,19 @@ private[graft] object Shared {
         .localCheckpoint()
     }
 
+  /** The canonical seed slice of the reach queries (khop3, g20–g23):
+    * customers of [[orderGraphEdges]] with key % 100 == 0. */
+  def orderGraphSeeds(s: SparkSession, dir: String): DataFrame =
+    orderGraphEdges(s, dir).select(col("src").as("seed")).distinct()
+      .filter(col("seed") < 1000000 && col("seed") % 100 === 0)
+
+  /** On-disk bytes of the tables [[orderGraphEdges]] reads — the input
+    * size [[Graph.adaptiveHopCheckpoint]] decides from. */
+  def orderGraphBytes(dir: String): Long =
+    graft.streaming.StreamOps.pathBytes(
+      java.nio.file.Paths.get(dir, "orders.parquet"),
+      java.nio.file.Paths.get(dir, "lineitem.parquet"))
+
   /** The 3-hop reach profile (seed, dist, n_nodes) over
     * [[orderGraphEdges]] from the canonical seed set (customers with
     * key % 100 == 0) — g07 reports it directly, g08 and g18 roll it up;
@@ -265,21 +278,17 @@ private[graft] object Shared {
     */
   def khop3(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "khop3") { _ =>
-      val e = orderGraphEdges(s, dir)
-      val seeds = e.select(col("src").as("seed")).distinct()
-        .filter(col("seed") < 1000000 && col("seed") % 100 === 0)
       // the BITSET form of the exact BFS (identical output, certified by
       // Round15Spec + the g07/g08/g18 oracles): per-seed reach sets ride
       // as mask columns, so no hop materializes (seed, node) pair rows —
-      // measured 4.5 s -> see OPTIMIZATION_r15.md. edgesDeduped:
-      // orderGraphEdges is DISTINCT and checkpointed by contract.
-      // Per-hop checkpoints stay ON here (unlike g20/g21's adaptive
-      // fuse): this build runs ONCE per session, COLD, and the fused
-      // plan's one-time analysis/codegen outweighs the checkpoint jobs
-      // at that temperature — measured cold 6.48 s (cut) vs 7.18 s
-      // (fused); warm inverts (4.03 vs 3.18) but warm never happens
-      // (memoized).
-      Graph.kHopCountsBitset(e, seeds, k = 3, edgesDeduped = true)
+      // measured 4.5 s -> see OPTIMIZATION_r15.md. Its hops are always
+      // cut (unlike g20/g21's adaptive fuse): this build runs ONCE per
+      // session, COLD, and the fused plan's one-time analysis/codegen
+      // outweighs the checkpoint jobs at that temperature — measured
+      // cold 6.48 s (cut) vs 7.18 s (fused); warm inverts (4.03 vs 3.18)
+      // but warm never happens (memoized).
+      Graph.kHopCountsBitset(orderGraphEdges(s, dir),
+          orderGraphSeeds(s, dir), k = 3)
         .localCheckpoint()
     }
 }

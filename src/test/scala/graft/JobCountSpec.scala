@@ -16,10 +16,21 @@ import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS,
 import org.apache.spark.sql.functions._
 
 /** Jobs a batch query starts beyond its own: a table already loaded in the
-  * session is not inferred again, and a global sort of a small input
-  * shuffles to one partition without a job that samples range bounds.
+  * session is not inferred again, a global sort of a small input
+  * shuffles to one partition without a job that samples range bounds,
+  * and building a reach-sketch plan starts none.
   */
 class JobCountSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  /** Jobs the khop3 build starts at sf0.001 (the seed collect and the
+    * per-hop cuts), as counted before the bitset kernel lost its
+    * `edgesDeduped`/`checkpoint` knobs: its plan must not change. */
+  private val KHop3BuildJobs = 20
+
+  /** Jobs building g23 starts at sf0.001: the shuffle-map and broadcast
+    * stages that planning its ten lazy per-hop cuts runs under AQE. A
+    * driver-side collect or count per hop would add to them. */
+  private val G23BuildJobs = 41
 
   /** Every job started while `body` runs, read by a listener after the
     * listener bus has delivered all of them. */
@@ -75,6 +86,33 @@ class JobCountSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       case RangePartitioning(_, n) => n > 1
       case _ => false
     }, partitioning)
+  }
+
+  test("building g22 starts no job and g23 only its hop cuts' jobs once " +
+      "the order graph is warm") {
+    graft.queries.Shared.orderGraphEdges(spark, sf)
+    def build(q: String) = jobsDuring(SparkEntry.queries(q)(spark, sf))
+    val g22 = build("g22_reach_sketch_delta")
+    assert(g22.isEmpty, s"jobs ${g22.map(_.jobId)} started while only " +
+      "building g22's fused plan")
+    val g23 = build("g23_reach_sketch_k10")
+    assert(g23.size === G23BuildJobs, s"g23 build jobs ${g23.map(_.jobId)}")
+  }
+
+  test("the khop3 build starts a fixed number of jobs once the order " +
+      "graph is warm") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-khop3-jobs")
+    try {
+      // a fresh dir is a fresh memo key: khop3 and the order graph build
+      // again here whatever ran before in this session
+      Seq("orders.parquet", "lineitem.parquet").foreach(f =>
+        java.nio.file.Files.copy(java.nio.file.Paths.get(sf, f),
+          dir.resolve(f)))
+      graft.queries.Shared.orderGraphEdges(spark, dir.toString)
+      val jobs = jobsDuring(graft.queries.Shared.khop3(spark, dir.toString))
+      assert(jobs.size === KHop3BuildJobs,
+        s"khop3 build jobs ${jobs.map(_.jobId)}")
+    } finally graft.queries.Shared.deleteTree(dir)
   }
 
   test("a node without a logical link is left unchanged") {

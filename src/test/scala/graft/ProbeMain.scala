@@ -176,8 +176,7 @@ object ProbeMain {
       // EAGER materialization per hop so each hop's cost is attributable)
       val e0 = graft.queries.Shared.orderGraphEdges(spark, dir)
       lap("edges-build")(e0.count())
-      val seeds = e0.select(col("src").as("seed")).distinct()
-        .filter(col("seed") < 1000000 && col("seed") % 100 === 0)
+      val seeds = graft.queries.Shared.orderGraphSeeds(spark, dir)
       println(s"PAIRSPROF edges=${e0.count()} seeds=${seeds.count()}")
       val e1 = e0.select(col("src"), col("dst")).distinct()
         .localCheckpoint(false)
@@ -199,11 +198,8 @@ object ProbeMain {
       }
       lap("khop3-full")(graft.operators.Graph.kHopCounts(e0, seeds, 3)
         .write.format("noop").mode("overwrite").save())
-      lap("khop3-bitset-cut")(graft.operators.Graph.kHopCountsBitset(
-          e0, seeds, 3, edgesDeduped = true)
-        .write.format("noop").mode("overwrite").save())
-      lap("khop3-bitset-fused")(graft.operators.Graph.kHopCountsBitset(
-          e0, seeds, 3, edgesDeduped = true, checkpoint = false)
+      lap("khop3-bitset")(graft.operators.Graph.kHopCountsBitset(
+          e0, seeds, 3)
         .write.format("noop").mode("overwrite").save())
       spark.stop(); return
     }
@@ -227,8 +223,7 @@ object ProbeMain {
       }
       val e = graft.queries.Shared.orderGraphEdges(spark, dir)
       e.count()
-      val seeds = e.select(col("src").as("seed")).distinct()
-        .filter(col("seed") < 1000000 && col("seed") % 100 === 0)
+      val seeds = graft.queries.Shared.orderGraphSeeds(spark, dir)
       // mirror of reachSketch's LONG-register grid (g20: k=3, m=64)
       val H = 1099511627776L
       val m = 64
@@ -299,7 +294,7 @@ object ProbeMain {
         val ts = (1 to 2).map { _ =>
           val t0 = System.nanoTime()
           graft.operators.Graph.reachSketch(e, seeds, k = 3, m = 64,
-            edgesDeduped = true, checkpoint = cp).count()
+            checkpoint = cp).count()
           (System.nanoTime() - t0) / 1e9
         }
         println(f"REACHPROF $l min=${ts.min}%.2f s (${ts.map(t => f"$t%.2f").mkString(",")})")
@@ -308,7 +303,7 @@ object ProbeMain {
         val ts = (1 to 2).map { _ =>
           val t0 = System.nanoTime()
           graft.operators.Graph.reachSketch(e, seeds, k = 3, m = 64,
-            edgesDeduped = true, checkpoint = cp, intRegisters = true)
+            checkpoint = cp, intRegisters = true)
             .count()
           (System.nanoTime() - t0) / 1e9
         }
@@ -401,34 +396,6 @@ object ProbeMain {
       }
       lap("d17-cut")(d17Body(_.localCheckpoint()).count())
       lap("d17-nocut")(d17Body(identity).count())
-      spark.stop(); return
-    }
-    // SPARK_GRAFT_PROBE=reachk: full-vs-delta reach-sketch timing at the
-    // hop depths given as args (the g22 lever measurement): the systolic
-    // changed-only propagation pays on the CONVERGED tail, so at k=3 on
-    // the small-diameter order graph (balls still growing every hop) it
-    // is overhead, while past ball saturation the delta hops collapse.
-    if (sys.env.get("SPARK_GRAFT_PROBE").contains("reachk")) {
-      import org.apache.spark.sql.functions.col
-      val e = graft.queries.Shared.orderGraphEdges(spark, dir)
-      val seeds = e.select(col("src").as("seed")).distinct()
-        .filter(col("seed") < 1000000 && col("seed") % 100 === 0)
-      val nNodes = e.select(col("src")).union(e.select(col("dst")))
-        .distinct().count()
-      println(s"REACHK nodes=$nNodes")
-      args.map(_.toInt).foreach { k =>
-        Seq(false, true).foreach { delta =>
-          val cc = scala.collection.mutable.Buffer.empty[Long]
-          val t0 = System.nanoTime()
-          graft.operators.Graph.reachSketch(e, seeds, k = k, m = 64,
-            edgesDeduped = true, intRegisters = true, deltaOnly = delta,
-            changedCounts = if (delta) Some(cc) else None)
-            .count()
-          val sec = (System.nanoTime() - t0) / 1e9
-          val tail = if (delta) s" changed=${cc.mkString(",")}" else ""
-          println(f"REACHK k=$k delta=$delta $sec%.2f s$tail")
-        }
-      }
       spark.stop(); return
     }
     args.foreach { name =>

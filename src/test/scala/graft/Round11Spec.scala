@@ -48,8 +48,7 @@ class Round11Spec extends SparkSpec {
     // compression cannot hide the width change; ids and edge-side bytes
     // are shared overhead, hence the 0.85 bound rather than 0.5.
     val e = graft.queries.Shared.orderGraphEdges(spark, sf) // warm OUTSIDE
-    val seeds = e.select(col("src").as("seed")).distinct()
-      .filter(col("seed") < 1000000 && col("seed") % 100 === 0)
+    val seeds = graft.queries.Shared.orderGraphSeeds(spark, sf)
       .localCheckpoint()
     def shuffleBytes(body: => Unit): Long = {
       val total = new java.util.concurrent.atomic.AtomicLong()
@@ -66,12 +65,11 @@ class Round11Spec extends SparkSpec {
       total.get()
     }
     val longBytes = shuffleBytes {
-      graft.operators.Graph.reachSketch(e, seeds, k = 3, m = 64,
-        edgesDeduped = true).count()
+      graft.operators.Graph.reachSketch(e, seeds, k = 3, m = 64).count()
     }
     val intBytes = shuffleBytes {
       graft.operators.Graph.reachSketch(e, seeds, k = 3, m = 64,
-        edgesDeduped = true, intRegisters = true).count()
+        intRegisters = true).count()
     }
     assert(longBytes > 0 && intBytes > 0)
     info(f"shuffle-write bytes: packed-INT $intBytes vs LONG $longBytes " +

@@ -360,41 +360,28 @@ class Round13Spec extends SparkSpec {
     // row never re-enters the join
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
     val seeds = Seq(1L, 2L, 3L, 4L).toDF("seed")
-    // k=5 exceeds the path's diameter, so the delta run CONVERGES
-    // mid-loop (changed empties after hop 4: node 1's ball completes at
-    // hop 3, nothing feeds anyone at hop 4) and hops past convergence
-    // take the read-off-only branch — the run must still emit all 5
-    // dists with the stable registers, equal to the full recompute.
-    val cc = scala.collection.mutable.Buffer.empty[Long]
-    def run(delta: Boolean, activation: Double = 1.0) =
+    // k=5 exceeds the path's diameter, so the changed set EMPTIES after
+    // hop 3 and hops 4-5 join nothing — the run must still emit all 5
+    // dists with the stable registers. The rows are those of propagating
+    // every node's registers at every hop (recorded from that kernel).
+    val full = Seq((1L, 1, 1L), (1L, 2, 3L), (1L, 3, 5L), (1L, 4, 5L),
+      (1L, 5, 5L), (2L, 1, 2L), (2L, 2, 4L), (2L, 3, 4L), (2L, 4, 4L),
+      (2L, 5, 4L), (3L, 1, 3L), (3L, 2, 3L), (3L, 3, 3L), (3L, 4, 3L),
+      (3L, 5, 3L), (4L, 1, 1L), (4L, 2, 1L), (4L, 3, 1L), (4L, 4, 1L),
+      (4L, 5, 1L))
+    def run(checkpoint: Boolean) =
       graft.operators.Graph.reachSketch(
-        edges, seeds, k = 5, m = 8, intRegisters = true, deltaOnly = delta,
-        deltaActivation = activation,
-        changedCounts = if (delta) Some(cc) else None)
+        edges, seeds, k = 5, m = 8, checkpoint = checkpoint,
+        intRegisters = true)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
       .sortBy(t => (t._1, t._2))
-    val full = run(false)
-    // activation 1.0 forces systolic mode from hop 1 — the pure-delta
-    // mechanism probe (the adaptive default would run full hops until
-    // the register-sum drop flattens)
-    val dl = run(true)
+    val dl = run(checkpoint = true)
     assert(dl === full, "delta propagation changed register values")
+    assert(run(checkpoint = false) === full,
+      "the fused (uncheckpointed) hops changed register values")
     assert(dl.map(_._2).distinct.sorted == Seq(1, 2, 3, 4, 5),
       s"missing dists after convergence: $dl")
-    // telemetry: the changed set shrinks along the path and EMPTIES —
-    // the convergence signal the early-stop keys on (no counts are
-    // recorded after it fires)
-    assert(cc.toSeq == Seq(3L, 2L, 1L, 0L),
-      s"changed-set trajectory diverged: $cc")
-    // the ADAPTIVE default must also be value-identical — the heuristic
-    // times the switch, never the values (a superset propagation is
-    // always correct)
-    cc.clear()
-    assert(run(true, activation = 0.02) === full,
-      "adaptive systolic switching changed register values")
-    // sanity: the path graph's exact reach profile under a perfect
-    // estimator would grow along the path; at m=8 just assert node 1's
-    // estimate is non-decreasing with dist and node 4's is flat
+    // node 4 has no out-edges, so its ball is itself at every dist
     val n4 = dl.filter(_._1 == 4L).map(_._3)
     assert(n4.distinct.size == 1, s"converged node drifted: $n4")
   }

@@ -43,18 +43,11 @@ class Round15Spec extends SparkSpec {
     val want = Graph.kHopCounts(e, seeds, k = 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .toSet
-    val got = Graph.kHopCountsBitset(e, seeds, k = 3, edgesDeduped = true)
+    val got = Graph.kHopCountsBitset(e, seeds, k = 3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .toSet
     assert(got === want)
     assert(want.nonEmpty)
-    // the fused (checkpoint=false) variant is the same math with a
-    // lineage boundary removed — identical rows
-    val fused = Graph.kHopCountsBitset(e, seeds, k = 3,
-        edgesDeduped = true, checkpoint = false)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-      .toSet
-    assert(fused === want)
   }
 
   test("kHopCountsBitset falls back to the row form past the 4096-seed " +
