@@ -626,7 +626,10 @@ object Graph {
     * registers (NULL on neighbor rows), and as min only lowers them, a
     * row changed exactly when its merged sum is below `prev`. (An EXCEPT
     * of the register tables per hop cost 182.7 s vs 96.7 s full hops at
-    * sf10.) Duplicate edges change nothing.
+    * sf10.) Each hop's cut is eager and counts its changed rows as an
+    * observed metric of the same job; once a hop changes none, every
+    * later dist re-reads its table and no further hop runs. Duplicate
+    * edges change nothing.
     *
     * Output: (seed, dist, est_reach) for dist in 1..k, est_reach the
     * rounded ball-size estimate (seed itself included, matching
@@ -657,29 +660,16 @@ object Graph {
     // hash range: 2^40 (LONG registers) or 2^31 (INT); sums of m mins of
     // either width fit a long
     val H = if (intRegisters) 2147483648L else 1099511627776L
-    // per-hop cuts: constant lineage depth, and hop d's table feeds hop
-    // d+1 AND its read-off without re-execution; checkpoint=false fuses
-    // the k hops into one plan ([[adaptiveHopCheckpoint]] says when)
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint(false) else df
     val e = edges.select(col("src"), col("dst"))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-    // Register state lives as m LONG COLUMNS on one row per node — the
-    // representation is what makes the op scale. Three candidates were
-    // measured end-to-end:
-    //  - per-node array + typed-Aggregator min-merge: ObjectHashAggregate
-    //    boxes an m-long Seq per input row (19.6 s at sf0.1);
-    //  - exploded (node, j, v) rows + plain min: codegen, but the agg
-    //    input is E·m ROWS and per-task group counts ≈ row counts, so
-    //    map-side partials compress NOTHING and past memory the hash agg
-    //    falls back to external sort — 12.8 s at sf0.1 but 568 s at sf1
-    //    (44x at 10x data: the fallback, not the math);
-    //  - m min() columns at E-ROW grain (this): every aggregate buffer is
-    //    fixed-width codegen, per-task partial output is bounded by the
-    //    number of DISTINCT dst nodes the task saw (~V rows, not E·m), so
-    //    the shuffle carries node-sized partials and the whole hop stays
-    //    in two-phase HashAggregate at any scale.
+    // Register state lives as m LONG COLUMNS on one row per node. Also
+    // measured: a per-node array with a typed-Aggregator min-merge (19.6 s
+    // at sf0.1: ObjectHashAggregate boxes an m-long Seq per row) and
+    // exploded (node, j, v) rows (12.8 s at sf0.1 but 568 s at sf1: E·m
+    // agg rows defeat map-side partials and spill). Fixed-width min()
+    // columns keep every buffer in codegen and each task's partials
+    // node-sized, so the hop stays in two-phase HashAggregate at any scale.
     // register j of a singleton {node}: the seeded cross-engine hash
     def hashReg(j: Int): org.apache.spark.sql.Column =
       pmod(graft.functions.CrossHash.md5Long(
@@ -703,25 +693,40 @@ object Graph {
         rs.map(c => shiftrightunsigned(c, 32) +
           c.bitwiseAND(lit(0x7FFFFFFFL))).reduce(_ + _)
       else rs.reduce(_ + _)
-    var regs = cut(nodes.select(col("node") +: regCols: _*))
+    val mins = (0 until nCols).map(j => minFn(col(s"r$j")).as(s"r$j"))
+    var regs = nodes.select(col("node") +: regCols: _*)
+    if (checkpoint) regs = regs.localCheckpoint(false)
     var changed = regs // hop 0: every node's row is new
+    var converged = false
     val perHop = (1 to k).map { d =>
-      val fromNbr = e.join(changed, col("dst") === col("node"))
-        .select(col("src").as("node") +: rs :+
-          lit(null).cast(LongType).as("prev"): _*)
-      val merged = cut(regs.select(col("node") +: rs :+ ssum.as("prev"): _*)
-        .unionByName(fromNbr)
-        .groupBy(col("node"))
-        .agg(minFn(col("r0")).as("r0"),
-          (1 until nCols).map(j => minFn(col(s"r$j")).as(s"r$j")) :+
-            max(col("prev")).as("prev"): _*))
-      regs = merged.select(col("node") +: rs: _*)
-      // Fused hops join every row: there a filtered read of the previous
-      // hop is a second copy of the hop chain that prunes `prev` apart
-      // from the plain read, so exchange reuse no longer shares the two
-      // (g20 1.57 -> 8.61 s at sf0.1 with the filter).
-      changed = if (!checkpoint) regs
-        else merged.filter(ssum < col("prev")).select(col("node") +: rs: _*)
+      if (!converged) {
+        val fromNbr = e.join(changed, col("dst") === col("node"))
+          .select(col("src").as("node") +: rs: _*)
+        if (!checkpoint) {
+          // Fused hops join every row: there a filtered read of the
+          // previous hop is a second copy of the hop chain that prunes
+          // `prev` apart from the plain read, so exchange reuse no longer
+          // shares the two (g20 1.57 -> 8.61 s at sf0.1 with the filter).
+          regs = regs.unionByName(fromNbr).groupBy(col("node"))
+            .agg(mins.head, mins.tail: _*)
+          changed = regs
+        } else {
+          // the eager cut runs the hop and counts its changed rows in the
+          // same job; once none changed, later hops equal this one
+          val merged = regs.select(col("node") +: rs :+ ssum.as("prev"): _*)
+            .unionByName(fromNbr.withColumn("prev", lit(null).cast(LongType)))
+            .groupBy(col("node"))
+            .agg(mins.head, mins.tail :+ max(col("prev")).as("prev"): _*)
+            .observe("reach_changed",
+              count(when(ssum < col("prev"), 1)).as("n"))
+          val table = merged.localCheckpoint(true)
+          regs = table.select(col("node") +: rs: _*)
+          changed = table.filter(ssum < col("prev"))
+            .select(col("node") +: rs: _*)
+          converged = merged.queryExecution.observedMetrics("reach_changed")
+            .getLong(0) == 0L
+        }
+      }
       regs.join(broadcast(seeds.select(col("seed"))),
           col("node") === col("seed"))
         .select(col("seed"), lit(d).as("dist"), ssum.as("ssum"))

@@ -192,13 +192,13 @@ object Extras10 {
 
     // The k=10 reach sketch (VERDICT r13 item 5): the grain where the
     // changed-set rule pays — the order graph's effective diameter is ~5
-    // hops, so the changed set shrinks, empties, and hops past
-    // convergence join an empty set. Register values stay bit-identical
-    // to propagating every row (min is idempotent); the oracle extends
-    // the g20/g21 grid to 10 levels via a bounded recursive BFS. Hops
-    // are always cut here: each hop reads the previous merge twice, so a
-    // fused plan holds 2^k copies of hop 1 — fine at g20/g21's k=3,
-    // not at k=10.
+    // hops, so the changed set shrinks and empties, and dists past the
+    // hop that changed nothing re-read its table. Register values stay
+    // bit-identical to propagating every row (min is idempotent); the
+    // oracle extends the g20/g21 grid to 10 levels via a bounded
+    // recursive BFS. Hops are always cut here: each hop reads the
+    // previous merge twice, so a fused plan holds 2^k copies of hop 1 —
+    // fine at g20/g21's k=3, not at k=10.
     "g23_reach_sketch_k10" -> { (s, dir) =>
       Graph.reachSketch(Shared.orderGraphEdges(s, dir),
         Shared.orderGraphSeeds(s, dir), k = 10, m = 64, intRegisters = true)

@@ -3,22 +3,25 @@ package graft
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.graft.TestBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+  SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.Range
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning,
   RangePartitioning, SinglePartition}
-import org.apache.spark.sql.execution.{RangeExec, SparkPlan}
+import org.apache.spark.sql.execution.{RangeExec, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS,
   ShuffleExchangeExec}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 /** Jobs a batch query starts beyond its own: a table already loaded in the
   * session is not inferred again, a global sort of a small input
   * shuffles to one partition without a job that samples range bounds,
-  * and building a reach-sketch plan starts none.
+  * building a fused reach-sketch plan starts none, and a cut one starts
+  * only the jobs of its hop cuts.
   */
 class JobCountSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -27,25 +30,36 @@ class JobCountSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     * `edgesDeduped`/`checkpoint` knobs: its plan must not change. */
   private val KHop3BuildJobs = 20
 
-  /** Jobs building g23 starts at sf0.001: the shuffle-map and broadcast
-    * stages that planning its ten lazy per-hop cuts runs under AQE. A
-    * driver-side collect or count per hop would add to them. */
-  private val G23BuildJobs = 41
-
   /** Every job started while `body` runs, read by a listener after the
     * listener bus has delivered all of them. */
-  private def jobsDuring(body: => Unit): Seq[SparkListenerJobStart] = {
+  private def jobsDuring(body: => Unit): Seq[SparkListenerJobStart] =
+    jobsAndActionsDuring(body)._1
+
+  /** The jobs started while `body` runs, and the action each one runs
+    * under: the description of its SQL execution, such as
+    * "localCheckpoint at Graph.scala:723" (None outside any). */
+  private def jobsAndActionsDuring(body: => Unit)
+      : (Seq[SparkListenerJobStart], Seq[Option[String]]) = {
     val sc = spark.sparkContext
     val seen = ArrayBuffer.empty[SparkListenerJobStart]
+    val actions = scala.collection.mutable.Map.empty[Long, String]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         seen.synchronized(seen += e)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          actions.synchronized(actions(x.executionId) = x.description)
+        case _ =>
+      }
     }
     TestBridge.waitListenerBus(sc)
     sc.addSparkListener(listener)
     try { body; TestBridge.waitListenerBus(sc) }
     finally sc.removeSparkListener(listener)
-    seen.synchronized(seen.toList)
+    val jobs = seen.synchronized(seen.toList)
+    (jobs, actions.synchronized(jobs.map(j =>
+      Option(j.properties.getProperty(SQLExecution.EXECUTION_ID_KEY))
+        .flatMap(id => actions.get(id.toLong)))))
   }
 
   /** Runs the query's plan and returns the jobs that end in a result
@@ -91,12 +105,17 @@ class JobCountSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("building g22 starts no job and g23 only its hop cuts' jobs once " +
       "the order graph is warm") {
     graft.queries.Shared.orderGraphEdges(spark, sf)
-    def build(q: String) = jobsDuring(SparkEntry.queries(q)(spark, sf))
-    val g22 = build("g22_reach_sketch_delta")
+    val g22 = jobsDuring(SparkEntry.queries("g22_reach_sketch_delta")(
+      spark, sf))
     assert(g22.isEmpty, s"jobs ${g22.map(_.jobId)} started while only " +
       "building g22's fused plan")
-    val g23 = build("g23_reach_sketch_k10")
-    assert(g23.size === G23BuildJobs, s"g23 build jobs ${g23.map(_.jobId)}")
+    // g23 cuts every hop, and each cut runs as a localCheckpoint action;
+    // a driver-side collect or count per hop would be an action of its own
+    val (g23, actions) = jobsAndActionsDuring(
+      SparkEntry.queries("g23_reach_sketch_k10")(spark, sf))
+    assert(g23.nonEmpty)
+    assert(actions.forall(_.exists(_.startsWith("localCheckpoint at "))),
+      s"g23 build jobs ran under other actions: ${actions.distinct}")
   }
 
   test("the khop3 build starts a fixed number of jobs once the order " +

@@ -12,7 +12,7 @@ import graft.streaming.StreamOps
   * on an exact-ms tie), update-mode aggregation's emission-set
   * discipline, the k26 hot-set DRIFT probe (a wrong hot set degrades
   * state/skew but never output), the string-keyed hot-salt variant's
-  * parity, and g22's delta-propagation value-invariance.
+  * parity, and g22's changed-set propagation value-invariance.
   */
 class Round13Spec extends SparkSpec {
 
@@ -360,10 +360,11 @@ class Round13Spec extends SparkSpec {
     // row never re-enters the join
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
     val seeds = Seq(1L, 2L, 3L, 4L).toDF("seed")
-    // k=5 exceeds the path's diameter, so the changed set EMPTIES after
-    // hop 3 and hops 4-5 join nothing — the run must still emit all 5
-    // dists with the stable registers. The rows are those of propagating
-    // every node's registers at every hop (recorded from that kernel).
+    // k=5 exceeds the path's diameter, so the changed set EMPTIES at
+    // hop 4 and hop 5 re-reads hop 4's table — the run must still emit
+    // all 5 dists with the stable registers. The rows are those of
+    // propagating every node's registers at every hop (recorded from
+    // that kernel).
     val full = Seq((1L, 1, 1L), (1L, 2, 3L), (1L, 3, 5L), (1L, 4, 5L),
       (1L, 5, 5L), (2L, 1, 2L), (2L, 2, 4L), (2L, 3, 4L), (2L, 4, 4L),
       (2L, 5, 4L), (3L, 1, 3L), (3L, 2, 3L), (3L, 3, 3L), (3L, 4, 3L),
@@ -388,9 +389,15 @@ class Round13Spec extends SparkSpec {
 
   test("g22 on the fixture is bit-identical to g21 (shared-oracle " +
       "invariance holds end-to-end, not just in the toy)") {
+    // g22 is g21's call, fused at this input size; its hops take the
+    // changed-set rule with per-hop checkpoints (above 1 GiB of input),
+    // so run that form here against g21's fused rows
     val g21 = SparkEntry.queries("g21_reach_sketch_int")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    val g22 = SparkEntry.queries("g22_reach_sketch_delta")(spark, sf)
+    val g22 = graft.operators.Graph.reachSketch(
+        graft.queries.Shared.orderGraphEdges(spark, sf),
+        graft.queries.Shared.orderGraphSeeds(spark, sf), k = 3, m = 64,
+        checkpoint = true, intRegisters = true)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
     assert(g22 === g21)
     assert(g21.nonEmpty)

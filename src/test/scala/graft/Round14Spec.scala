@@ -239,16 +239,27 @@ class Round14Spec extends SparkSpec {
       "views — the outer path went unexercised")
   }
 
-  test("g23 at k=10 extends g21's rows to ten dists") {
+  test("g23's k=10 rows equal the full recompute and extend g21's") {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
         .sortBy(t => (t._1, t._2))
     val g23 = rows(SparkEntry.queries("g23_reach_sketch_k10")(spark, sf))
+    // the full recompute: fused hops join every row at every hop. k=6,
+    // as a fused plan holds 2^k copies of hop 1 (k=10 stalls in
+    // analysis); the fixture graph stops changing before hop 6, so these
+    // dists cover g23's changed-set hops and its stop
+    val full = rows(graft.operators.Graph.reachSketch(
+      graft.queries.Shared.orderGraphEdges(spark, sf),
+      graft.queries.Shared.orderGraphSeeds(spark, sf), k = 6, m = 64,
+      checkpoint = false, intRegisters = true))
+    assert(full.nonEmpty)
+    assert(g23.filter(_._2 <= 6) === full,
+      "g23's changed-set hops diverged from the full recompute")
+    // past the stop every dist repeats the converged estimate
+    val tail = g23.filter(_._2 >= 6).groupBy(_._1).values
+      .map(_.map(_._3).distinct)
+    assert(tail.forall(_.size == 1), "g23 still changed after hop 6")
     val g21 = rows(SparkEntry.queries("g21_reach_sketch_int")(spark, sf))
-    assert(g21.nonEmpty)
-    // g21 runs fused at this input size and g23 with per-hop cuts, so
-    // this also checks that the two loops agree on the fixture graph (a
-    // fused k=10 call would plan 2^10 copies of hop 1)
     assert(g23.filter(_._2 <= 3) === g21,
       "g23's first three dists diverged from g21's")
     assert(g23.map(_._2).distinct.sorted == (1 to 10).toSeq,
