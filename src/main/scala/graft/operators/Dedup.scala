@@ -190,29 +190,30 @@ object Dedup {
       // several minhashPairs calls (e.g. a cap sweep) overrides this
       capMetricName: String = "minhash_bands_cap"): DataFrame = {
     // Repartition before the (expensive, map-only) signature stage: a
-    // single-file source otherwise pins all hashing onto one task. The
-    // three downstream uses share one computation via ReuseExchange on
-    // the repartition shuffle — no cache needed.
+    // single-file source otherwise pins all hashing onto one task. Each
+    // banded row carries its document's signature, so the pairs are
+    // verified without joining the signatures back: both sides of the band
+    // self-join read one capped banding, whose exchange they share through
+    // ReuseExchange, and the kernel runs once per document. A plan run in
+    // one stage (GraftExtensions) has no exchange to share and hashes a
+    // document once per side.
     val sigs = minhashSignatures(
       df.repartition(col(idCol)), idCol, textCol, k)
     val bandedL = capBucket(minhashBands(sigs, k, bands),
         Seq("band_idx", "band_val"), idCol, maxBucket, capMetricName)
-      .select(col(idCol).as("a"), col("band_idx"), col("band_val"))
-    val bandedR = bandedL
-      .select(col("a").as("b"), col("band_idx"), col("band_val"))
-    val cand = bandedL.join(bandedR,
-        Seq("band_idx", "band_val")).filter(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-    val sa = sigs.select(col(idCol).as("a"), col("sig").as("sig_a"))
-    val sb = sigs.select(col(idCol).as("b"), col("sig").as("sig_b"))
-    cand.join(sa, "a").join(sb, "b")
-      .withColumn("n_eq",
+      .select(col(idCol).as("a"), col("sig").as("sig_a"), col("band_idx"),
+        col("band_val"))
+    val bandedR = bandedL.select(col("a").as("b"), col("sig_a").as("sig_b"),
+      col("band_idx"), col("band_val"))
+    bandedL.join(bandedR, Seq("band_idx", "band_val"))
+      .filter(col("a") < col("b"))
+      .select(col("a"), col("b"),
         aggregate(zip_with(col("sig_a"), col("sig_b"),
             (u, v) => when(u === v, 1).otherwise(0)),
-          lit(0), (acc, x) => acc + x))
+          lit(0), (acc, x) => acc + x).as("n_eq"))
       .filter(col("n_eq") * 100 >= lit(minJaccardPct) * k)
-      .select(col("a"), col("b"), col("n_eq"),
-        (col("n_eq").cast("double") / k).as("est_jaccard"))
+      .distinct()
+      .withColumn("est_jaccard", col("n_eq").cast("double") / k)
   }
 
   // ---- SimHash ----------------------------------------------------------

@@ -468,12 +468,22 @@ object Graph {
     * either way — the checkpoint is a lineage boundary, never a
     * semantic. An input of unknown size
     * ([[graft.streaming.StreamOps.UnknownBytes]]) keeps checkpoints on.
+    *
+    * Depth decides too: each fused hop reads the previous hop's table
+    * twice (the merge's union and the edge join), so the fused plan
+    * doubles per hop. At g20–g22's k = 3 that is 8 copies of hop 1; at
+    * g23's k = 10 it is 1024, and that plan sat more than 5 minutes in
+    * Catalyst's analysis before running. A run deeper than
+    * [[MaxFusedHops]] cuts every hop whatever its input size.
     */
-  def adaptiveHopCheckpoint(inputBytes: Long): Boolean =
-    inputBytes > HopCheckpointBytes
+  def adaptiveHopCheckpoint(inputBytes: Long, k: Int): Boolean =
+    k > MaxFusedHops || inputBytes > HopCheckpointBytes
 
   /** Input size from which [[adaptiveHopCheckpoint]] cuts every hop. */
   private val HopCheckpointBytes = 1L << 30
+
+  /** Deepest run [[adaptiveHopCheckpoint]] fuses: g20–g22's depth. */
+  private val MaxFusedHops = 3
 
   /** Widest seed set [[kHopCountsBitset]] runs as bitsets: 64 words. */
   val MaxBitsetSeeds = 4096

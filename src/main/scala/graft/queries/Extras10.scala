@@ -196,12 +196,13 @@ object Extras10 {
     // hop that changed nothing re-read its table. Register values stay
     // bit-identical to propagating every row (min is idempotent); the
     // oracle extends the g20/g21 grid to 10 levels via a bounded
-    // recursive BFS. Hops are always cut here: each hop reads the
-    // previous merge twice, so a fused plan holds 2^k copies of hop 1 —
-    // fine at g20/g21's k=3, not at k=10.
+    // recursive BFS. At k = 10 the checkpoint policy cuts every hop at
+    // any input size (a fused plan would hold 2^10 copies of hop 1).
     "g23_reach_sketch_k10" -> { (s, dir) =>
       Graph.reachSketch(Shared.orderGraphEdges(s, dir),
-        Shared.orderGraphSeeds(s, dir), k = 10, m = 64, intRegisters = true)
+        Shared.orderGraphSeeds(s, dir), k = 10, m = 64, intRegisters = true,
+        checkpoint = Graph.adaptiveHopCheckpoint(Shared.orderGraphBytes(dir),
+          k = 10))
     })
 
   /** The g20/g21 register-grid oracle generalized to 10 distance levels:

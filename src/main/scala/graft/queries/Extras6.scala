@@ -319,7 +319,8 @@ object Extras6 {
       // multi-GB graphs keep the constant-lineage checkpoints)
       Graph.reachSketch(Shared.orderGraphEdges(s, dir),
         Shared.orderGraphSeeds(s, dir), k = 3, m = 64,
-        checkpoint = Graph.adaptiveHopCheckpoint(Shared.orderGraphBytes(dir)))
+        checkpoint = Graph.adaptiveHopCheckpoint(Shared.orderGraphBytes(dir),
+          k = 3))
     })
 
   /** The k20-family cutoff model as a shared DuckDB CTE prefix (ADVICE

@@ -120,7 +120,8 @@ object Extras7 {
       // sf0.1, same shape at sf1)
       Graph.reachSketch(Shared.orderGraphEdges(s, dir),
         Shared.orderGraphSeeds(s, dir), k = 3, m = 64, intRegisters = true,
-        checkpoint = Graph.adaptiveHopCheckpoint(Shared.orderGraphBytes(dir)))
+        checkpoint = Graph.adaptiveHopCheckpoint(Shared.orderGraphBytes(dir),
+          k = 3))
     },
 
     // transformWithState under the oracle gate (VERDICT r10 item 4):

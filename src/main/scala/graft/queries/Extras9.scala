@@ -152,7 +152,8 @@ object Extras9 {
     "g22_reach_sketch_delta" -> { (s, dir) =>
       Graph.reachSketch(Shared.orderGraphEdges(s, dir),
         Shared.orderGraphSeeds(s, dir), k = 3, m = 64, intRegisters = true,
-        checkpoint = Graph.adaptiveHopCheckpoint(Shared.orderGraphBytes(dir)))
+        checkpoint = Graph.adaptiveHopCheckpoint(Shared.orderGraphBytes(dir),
+          k = 3))
     })
 
   /** The unmatched-LEFT null-pad rule shared by k28/k30 (interpolated on

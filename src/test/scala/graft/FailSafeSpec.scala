@@ -21,7 +21,7 @@ class FailSafeSpec extends SparkSpec {
   private def assertConservative(bytes: Long): Unit = {
     assert(bytes === StreamOps.UnknownBytes)
     assert(StreamOps.adaptiveStatePartitions(spark, bytes) === ceiling)
-    assert(Graph.adaptiveHopCheckpoint(bytes))
+    assert(Graph.adaptiveHopCheckpoint(bytes, k = 3))
   }
 
   test("a missing path sizes as unknown and picks the conservative branch") {
@@ -50,6 +50,18 @@ class FailSafeSpec extends SparkSpec {
       assert(StreamOps.pathBytes(tmp) === 15L)
       assert(StreamOps.pathBytes(tmp.resolve("a"), tmp.resolve("d")) === 15L)
     } finally Shared.deleteTree(tmp)
+  }
+
+  test("a reach sketch deeper than 3 hops is cut at any input size") {
+    // a fused plan doubles per hop: k = 10 never fuses, k = 3 fuses below
+    // 1 GiB and cuts above it, as before the policy took k
+    val tiny = Shared.orderGraphBytes(sf)
+    assert(tiny > 0L && tiny < (1L << 30))
+    assert(Graph.adaptiveHopCheckpoint(tiny, k = 10))
+    assert(Graph.adaptiveHopCheckpoint(tiny, k = 4))
+    assert(!Graph.adaptiveHopCheckpoint(tiny, k = 3))
+    assert(!Graph.adaptiveHopCheckpoint(1L << 30, k = 3))
+    assert(Graph.adaptiveHopCheckpoint((1L << 30) + 1, k = 3))
   }
 
   test("the BPE merge-table collect fails past the trained merge count") {

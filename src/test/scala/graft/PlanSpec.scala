@@ -1,12 +1,26 @@
 package graft
 
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.internal.SQLConf
 
 /** Physical-plan quality gates: the properties that make these queries
   * survive a 100x scale-up, asserted against explain output so a regression
   * in plan shape fails CI, not just the benchmark.
+  *
+  * Every test builds its plans as a large input gets them: with the
+  * coalescing floor scoped to one byte, every fixture input is above it,
+  * so [[GraftExtensions]]' one-partition rules leave the sf0.001 plans as
+  * they are at scale.
   */
 class PlanSpec extends SparkSpec {
+
+  override def withFixture(test: NoArgTest) = {
+    val key = SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE.key
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "1b")
+    try super.withFixture(test)
+    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 
   private def plan(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sf)
