@@ -29,9 +29,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Every session built here carries [[GraftExtensions]]: the native SQL
   * functions, the table functions (`kafka_consumer`, the corpus TVFs) and
-  * the AQE rule that sorts a small input in one partition. Extensions
-  * apply only when `getOrCreate` builds the session; a session that
-  * already exists is returned as it is.
+  * three rules that plan an input below AQE's coalescing floor as one
+  * partition, one each for reads, joins and sorts (listed in the
+  * [[GraftExtensions]] scaladoc). Extensions apply only when
+  * `getOrCreate` builds the session; a session that already exists is
+  * returned as it is.
   */
 object GraftSession {
 

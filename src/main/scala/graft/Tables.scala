@@ -35,7 +35,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = graft.queries.Shared.memo(spark, dir, s"table:$name")(_ =>
+    val df = graft.queries.Shared.memo(spark, dir, s"table:$name")(
       read(spark, dir, name))
     if (df.sparkSession eq spark) df else read(spark, dir, name)
   }

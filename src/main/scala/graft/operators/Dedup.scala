@@ -16,53 +16,67 @@ import graft.functions.CrossHash._
   *    candidate pairs (a tiny fraction of the corpus) are joined back for
   *    exact comparison — never all pairs.
   *  - Hot band-buckets (boilerplate text) explode quadratically, so every
-  *    candidate generator caps bucket population deterministically (keep
-  *    the `maxBucket` lowest ids per bucket; see [[capBucket]]) — one
-  *    pathological cluster then contributes O(maxBucket²) pairs instead of
-  *    O(cluster²). Recall cost: pairs between two DROPPED members of the
-  *    same hot bucket are missed unless another band catches them; for
-  *    dedup this is usually recovered transitively through the kept members
-  *    (connected components), and [[bucketOverflow]] reports exactly which
-  *    buckets were truncated. Thresholds are compared in integer space
-  *    (2*eq >= k) so float rounding can't flip a decision.
+  *    candidate generator pairs through [[bucketPairs]], which caps bucket
+  *    population deterministically (keeps the `maxBucket` lowest ids per
+  *    bucket) — one pathological cluster then contributes O(maxBucket²)
+  *    pairs instead of O(cluster²). Recall cost: pairs between two DROPPED
+  *    members of the same hot bucket are missed unless another band
+  *    catches them; for dedup this is usually recovered transitively
+  *    through the kept members (connected components), and
+  *    [[bucketOverflow]] reports exactly which buckets were truncated.
+  *    Thresholds are compared in integer space (2*eq >= k) so float
+  *    rounding can't flip a decision.
   */
 object Dedup {
 
-  /** Deterministic bucket cap: keep the `maxBucket` lowest-`idCol` rows per
-    * bucket key. Deterministic (not sampled) so reruns — and the DuckDB
-    * oracle — reproduce the exact same candidate set. The row_number
-    * window partitions by the same key the candidate self-join shuffles
-    * on, so it adds no extra exchange. `maxBucket <= 0` disables.
+  /** The candidate generator behind every near-dup detector here: the
+    * pairs of `keyed` rows in one bucket (equal `keys`), as (keys…, a, b,
+    * c_a…, c_b…) with a < b, where `a`/`b` are the rows' `id`s and each
+    * `carry` column `c` comes back once per side. Each bucket is first
+    * capped to its `maxBucket` lowest ids (`<= 0`: no cap) —
+    * deterministic, so reruns and the DuckDB oracle get the same
+    * candidates. The window partitions by the key the self-join shuffles
+    * on, and the right side renames the left, so both sides share one
+    * exchange (ReuseExchange).
     *
-    * When `observeAs` is set, the truncation loss is emitted as observed
-    * metrics IN THE SAME PASS (no second scan, accumulator-only):
-    * `rows_dropped` (rows past the cap) and `buckets_overflowed` (counted
-    * exactly via the rank == cap+1 sentinel row — one per hot bucket, no
-    * distinct needed). A production run reads them off the query's
-    * observedMetrics / QueryExecutionListener; [[bucketOverflow]] remains
-    * the per-bucket forensic twin. The node sits below the candidate
-    * self-join's shuffle and its subtree feeds both sides of that join —
-    * DedupSpec asserts the metrics still surface through observedMetrics
-    * with AQE on, for every capped generator. Caveats that DO apply:
-    * metrics exist only after an action on the SAME QueryExecution
-    * (collect the DataFrame you observe, or attach an Observation), and
-    * a plan that short-circuits the subtree (e.g. LIMIT 0) reports zeros.
+    * With `observeAs`, the same pass emits observed metrics `rows_dropped`
+    * (rows past the cap) and `buckets_overflowed` (one rank == cap+1
+    * sentinel per hot bucket); [[bucketOverflow]] is the per-bucket
+    * forensic twin. DedupSpec asserts they surface with AQE on for every
+    * capped generator. They exist only after an action on the SAME
+    * QueryExecution, and a plan that short-circuits the subtree (e.g.
+    * LIMIT 0) reports zeros.
     */
-  private[operators] def capBucket(df: DataFrame, keys: Seq[String], idCol: String,
-      maxBucket: Int, observeAs: String = null): DataFrame =
-    if (maxBucket <= 0) df
-    else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keys.map(col): _*).orderBy(col(idCol))
-      val marked = df.withColumn("__bp", row_number().over(w))
-      val observed =
-        if (observeAs == null) marked
-        else marked.observe(observeAs,
-          count(when(col("__bp") > maxBucket, 1)).as("rows_dropped"),
-          count(when(col("__bp") === maxBucket + 1, 1))
-            .as("buckets_overflowed"))
-      observed.filter(col("__bp") <= maxBucket).drop("__bp")
-    }
+  private[operators] def bucketPairs(keyed: DataFrame, id: String,
+      keys: Seq[String], carry: Seq[String], maxBucket: Int,
+      observeAs: String = null): DataFrame = {
+    val capped =
+      if (maxBucket <= 0) keyed
+      else {
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(keys.map(col): _*).orderBy(col(id))
+        val marked = keyed.withColumn("__bp", row_number().over(w))
+        val observed =
+          if (observeAs == null) marked
+          else marked.observe(observeAs,
+            count(when(col("__bp") > maxBucket, 1)).as("rows_dropped"),
+            count(when(col("__bp") === maxBucket + 1, 1))
+              .as("buckets_overflowed"))
+        observed.filter(col("__bp") <= maxBucket).drop("__bp")
+      }
+    // rename in place, keeping keyed's column order
+    val l = capped.select(capped.columns.toSeq.collect {
+      case c if c == id => col(c).as("a")
+      case c if keys.contains(c) => col(c)
+      case c if carry.contains(c) => col(c).as(s"${c}_a")
+    }: _*)
+    val r = l.select(l.columns.toSeq.map {
+      case "a" => col("a").as("b")
+      case c if keys.contains(c) => col(c)
+      case c => col(c).as(c.stripSuffix("_a") + "_b")
+    }: _*)
+    l.join(r, keys).filter(col("a") < col("b"))
+  }
 
   /** Truncation report for a capped candidate generator: bucket keys whose
     * population exceeds `maxBucket`, with kept/dropped counts. Run it on
@@ -72,7 +86,7 @@ object Dedup {
     */
   def bucketOverflow(banded: DataFrame, keys: Seq[String],
       maxBucket: Int): DataFrame = {
-    // capBucket treats maxBucket <= 0 as "capping disabled"; a truncation
+    // bucketPairs treats maxBucket <= 0 as "capping disabled"; a truncation
     // report for a disabled cap would list every bucket as overflowing.
     require(maxBucket > 0,
       "bucketOverflow requires an enabled cap (maxBucket > 0)")
@@ -179,9 +193,10 @@ object Dedup {
   /** Near-dup candidate pairs via MinHash LSH, verified against the full
     * signatures: (a, b, n_eq, est_jaccard), keeping pairs with
     * n_eq/k >= minJaccard (integer comparison). One shuffle on the band key
-    * + one on the pair ids. Band buckets larger than `maxBucket` are
-    * truncated deterministically (see [[capBucket]]) so a hot boilerplate
-    * cluster can't go quadratic.
+    * + one on the pair ids. Candidates come from [[bucketPairs]] over the
+    * (band_idx, band_val) buckets, which truncates buckets larger than
+    * `maxBucket` deterministically so a hot boilerplate cluster can't go
+    * quadratic.
     */
   def minhashPairs(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 16, bands: Int = 4,
@@ -199,14 +214,8 @@ object Dedup {
     // document once per side.
     val sigs = minhashSignatures(
       df.repartition(col(idCol)), idCol, textCol, k)
-    val bandedL = capBucket(minhashBands(sigs, k, bands),
-        Seq("band_idx", "band_val"), idCol, maxBucket, capMetricName)
-      .select(col(idCol).as("a"), col("sig").as("sig_a"), col("band_idx"),
-        col("band_val"))
-    val bandedR = bandedL.select(col("a").as("b"), col("sig_a").as("sig_b"),
-      col("band_idx"), col("band_val"))
-    bandedL.join(bandedR, Seq("band_idx", "band_val"))
-      .filter(col("a") < col("b"))
+    bucketPairs(minhashBands(sigs, k, bands), idCol,
+        Seq("band_idx", "band_val"), Seq("sig"), maxBucket, capMetricName)
       .select(col("a"), col("b"),
         aggregate(zip_with(col("sig_a"), col("sig_b"),
             (u, v) => when(u === v, 1).otherwise(0)),
@@ -254,24 +263,23 @@ object Dedup {
     */
   def simhashPairs(df: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", maxHamming: Int = 3,
-      maxBucket: Int = 200): DataFrame = {
+      maxBucket: Int = 200): DataFrame =
+    simhashBandPairs(withSimhash(df.repartition(col(idCol)), textCol)
+        .select(col(idCol).as("id"), col("sh")),
+      maxHamming, maxBucket, "simhash_bands_cap")
+
+  /** The 4×15-bit band join behind [[simhashPairs]] and
+    * [[Multimodal.payloadSimhashPairs]]: (id, sh) in, (a, b, hamming) out.
+    */
+  private[operators] def simhashBandPairs(sh: DataFrame, maxHamming: Int,
+      maxBucket: Int, observeAs: String): DataFrame = {
     require(maxHamming <= 3, "4-band LSH over 60 bits is exact only to 3")
-    val sh = withSimhash(df.repartition(col(idCol)), textCol)
-      .select(col(idCol).as("id"), col("sh"))
-    // NOTE: the cap trades the pigeonhole exactness guarantee for bounded
-    // candidate counts — pairs whose shared bands were ALL truncated are
-    // missed. Inert below maxBucket-sized buckets (all test fixtures).
-    val banded = capBucket(
-      sh.select(col("id"), col("sh"),
-        posexplode(array((0 until 4).map(b =>
-          shiftright(col("sh"), b * 15).bitwiseAND(0x7FFFL)): _*))
-          .as(Seq("band_idx", "band_val"))),
-      Seq("band_idx", "band_val"), "id", maxBucket, "simhash_bands_cap")
-    val l = banded.select(col("id").as("a"), col("sh").as("sh_a"),
-      col("band_idx"), col("band_val"))
-    val r = banded.select(col("id").as("b"), col("sh").as("sh_b"),
-      col("band_idx"), col("band_val"))
-    l.join(r, Seq("band_idx", "band_val")).filter(col("a") < col("b"))
+    val banded = sh.select(col("id"), col("sh"),
+      posexplode(array((0 until 4).map(b =>
+        shiftright(col("sh"), b * 15).bitwiseAND(0x7FFFL)): _*))
+        .as(Seq("band_idx", "band_val")))
+    bucketPairs(banded, "id", Seq("band_idx", "band_val"), Seq("sh"),
+        maxBucket, observeAs)
       .select(col("a"), col("b"),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
       .distinct()
@@ -290,16 +298,11 @@ object Dedup {
       textCol: String = "text", w: Int = 3,
       prefixWords: Int = 3, maxBucket: Int = 200): DataFrame = {
     val tk = split(col(textCol), "\\s+")
-    val keyed = capBucket(
-      df.repartition(col(idCol)).select(col(idCol).as("id"),
-        md5(concat_ws(" ", slice(tk, 1, prefixWords))).as("block"),
-        shingles(col(textCol), w).as("sh")),
-      Seq("block"), "id", maxBucket, "ngram_blocks_cap")
-    val l = keyed.select(col("id").as("a"), col("block"),
-      col("sh").as("sh_a"))
-    val r = keyed.select(col("id").as("b"), col("block"),
-      col("sh").as("sh_b"))
-    l.join(r, "block").filter(col("a") < col("b"))
+    val keyed = df.repartition(col(idCol)).select(col(idCol).as("id"),
+      md5(concat_ws(" ", slice(tk, 1, prefixWords))).as("block"),
+      shingles(col(textCol), w).as("sh"))
+    bucketPairs(keyed, "id", Seq("block"), Seq("sh"), maxBucket,
+        "ngram_blocks_cap")
       .withColumn("n_inter", size(array_intersect(col("sh_a"), col("sh_b"))))
       .withColumn("n_union",
         size(col("sh_a")) + size(col("sh_b")) - col("n_inter"))
@@ -551,13 +554,9 @@ object Dedup {
   def embeddingNearDupPairsLsh(df: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding", minCosine: Double = 0.45,
       tables: Int = 8, planes: Int = 4, maxBucket: Int = 200): DataFrame = {
-    val buckets = capBucket(
-      Similarity.lshBucketsMulti(df, idCol, vecCol, tables, planes),
-      Seq("table", "bucket"), "id", maxBucket, "emb_lsh_buckets_cap")
-    val cand = buckets.select(col("id").as("a"), col("table"), col("bucket"))
-      .join(buckets.select(col("id").as("b"), col("table"), col("bucket")),
-        Seq("table", "bucket"))
-      .filter(col("a") < col("b"))
+    val cand = bucketPairs(
+        Similarity.lshBucketsMulti(df, idCol, vecCol, tables, planes),
+        "id", Seq("table", "bucket"), Nil, maxBucket, "emb_lsh_buckets_cap")
       .select(col("a"), col("b")).distinct()
     confirmCosine(df, cand, idCol, vecCol, minCosine)
   }
@@ -574,14 +573,11 @@ object Dedup {
   def embeddingNearDupPairsIvf(df: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding", minCosine: Double = 0.45,
       centroidModulus: Int = 50, maxBucket: Int = 200): DataFrame = {
-    val assign = capBucket(
-      Similarity.ivfAssign(df,
+    val assign = Similarity.ivfAssign(df,
         Similarity.sampleCentroids(df, idCol, vecCol, centroidModulus),
-        idCol, vecCol).select(col("id"), col("cell")),
-      Seq("cell"), "id", maxBucket, "emb_ivf_cells_cap")
-    val cand = assign.select(col("id").as("a"), col("cell"))
-      .join(assign.select(col("id").as("b"), col("cell")), Seq("cell"))
-      .filter(col("a") < col("b"))
+        idCol, vecCol).select(col("id"), col("cell"))
+    val cand = bucketPairs(assign, "id", Seq("cell"), Nil, maxBucket,
+        "emb_ivf_cells_cap")
       .select(col("a"), col("b")).distinct()
     confirmCosine(df, cand, idCol, vecCol, minCosine)
   }

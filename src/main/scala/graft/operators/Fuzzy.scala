@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Blocked fuzzy matching (entity resolution) over a string attribute —
@@ -28,8 +27,8 @@ import org.apache.spark.sql.functions._
   *    shares an edge token).
   *  - Hot blocks (a token shared by millions of names) are capped
   *    deterministically (keep the `maxBlock` lexicographically-smallest
-  *    names) exactly like the Dedup band caps, so one degenerate token
-  *    contributes O(maxBlock²) pairs, not O(block²).
+  *    names) by the same [[Dedup.bucketPairs]] as the Dedup band caps, so
+  *    one degenerate token contributes O(maxBlock²) pairs, not O(block²).
   *  - The levenshtein confirm — O(|a|·|b|) per pair — runs only on
   *    candidates that survive the free length-difference prefilter
   *    (|len(a)-len(b)| > maxDist can never be within maxDist edits).
@@ -65,21 +64,13 @@ object Fuzzy {
           concat(lit("l:"), element_at(toks, -1)))).as("bks"))
       .select(col("nm"), explode(col("bks")).as("bk"))
 
-    // Deterministic hot-block cap — same contract as Dedup.capBucket:
-    // keep the maxBlock smallest names per block so reruns and the
-    // oracle reproduce the identical candidate set.
-    val capped =
-      if (maxBlock <= 0) blocks
-      else blocks
-        .withColumn("__bp", row_number().over(
-          Window.partitionBy(col("bk")).orderBy(col("nm"))))
-        .filter(col("__bp") <= maxBlock).drop("__bp")
-
-    // Candidates within a block, ordered a < b; distinct because a pair
-    // can share both the first- and last-token block.
-    val cand = capped.as("x").join(capped.as("y"),
-        col("x.bk") === col("y.bk") && col("x.nm") < col("y.nm"))
-      .select(col("x.nm").as("name_a"), col("y.nm").as("name_b"))
+    // Candidates within a block, ordered a < b, through the shared
+    // Dedup.bucketPairs: each hot block is capped to its maxBlock smallest
+    // names, so reruns and the oracle reproduce the identical candidate
+    // set. Distinct because a pair can share both the first- and
+    // last-token block.
+    val cand = Dedup.bucketPairs(blocks, "nm", Seq("bk"), Nil, maxBlock)
+      .select(col("a").as("name_a"), col("b").as("name_b"))
       .distinct()
 
     // Length prefilter (free) then the real edit-distance confirm; join

@@ -181,19 +181,6 @@ object Multimodal {
       }
   }
 
-  /** Binary near-dup pairs via shared chunk fingerprints — the multimodal
-    * analogue of MinHash banding: payloads are sliced into overlapped
-    * windows ([[chunkPayload]]), bucketed by chunk md5, paired within
-    * buckets, and kept when they share ≥ `minShared` distinct chunk
-    * hashes. Same 100 TB discipline as every candidate generator here:
-    * buckets capped deterministically (lowest `maxBucket` ids per hash —
-    * a popular boilerplate chunk can't go quadratic), ONE shuffle on the
-    * chunk hash, pairs only ever within buckets. Catches re-encoded
-    * uploads / shared prefixes; window alignment means only
-    * stride-aligned matches count (content-defined chunking is the
-    * production upgrade for arbitrary-offset matches).
-    * Output: (a, b, n_shared).
-    */
   /** 60-bit SimHash of a binary payload over its chunk fingerprints —
     * the perceptual-hash analogue for opaque media: bit j is set iff
     * strictly more than half the payload's distinct chunk hashes have
@@ -222,47 +209,40 @@ object Multimodal {
   }
 
   /** Payload near-dup pairs by SimHash hamming distance ≤ `maxHamming`,
-    * candidates from the same 4-band pigeonhole blocking as the text
-    * simhash detector (exact to hamming 3; capped buckets trade the
-    * guarantee for bounded fan-out, same as every generator here).
+    * candidates from the same 4-band pigeonhole band join as the text
+    * simhash detector ([[Dedup.simhashBandPairs]]: exact to hamming 3;
+    * capped buckets trade the guarantee for bounded fan-out, same as
+    * every generator here). Output: (a, b, hamming).
     */
   def payloadSimhashPairs(df: DataFrame, window: Int = 64, stride: Int = 48,
       maxHamming: Int = 3, maxBucket: Int = 200,
-      payloadCol: String = "payload", idCol: String = "doc_id"): DataFrame = {
-    require(maxHamming <= 3, "4-band LSH over 60 bits is exact only to 3")
-    val sh = payloadSimhash(df, window, stride, payloadCol, idCol)
-      .select(col(idCol).as("id"), col("sh"))
-    val banded = Dedup.capBucket(
-      sh.select(col("id"), col("sh"),
-        posexplode(array((0 until 4).map(b =>
-          shiftright(col("sh"), b * 15).bitwiseAND(0x7FFFL)): _*))
-          .as(Seq("band_idx", "band_val"))),
-      Seq("band_idx", "band_val"), "id", maxBucket, "payload_simhash_cap")
-    val l = banded.select(col("id").as("a"), col("sh").as("sh_a"),
-      col("band_idx"), col("band_val"))
-    val r = banded.select(col("id").as("b"), col("sh").as("sh_b"),
-      col("band_idx"), col("band_val"))
-    l.join(r, Seq("band_idx", "band_val")).filter(col("a") < col("b"))
-      .select(col("a"), col("b"),
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("int")
-          .as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
+      payloadCol: String = "payload", idCol: String = "doc_id"): DataFrame =
+    Dedup.simhashBandPairs(
+      payloadSimhash(df, window, stride, payloadCol, idCol)
+        .select(col(idCol).as("id"), col("sh")),
+      maxHamming, maxBucket, "payload_simhash_cap")
 
+  /** Binary near-dup pairs via shared chunk fingerprints — the multimodal
+    * analogue of MinHash banding: payloads are sliced into overlapped
+    * windows ([[chunkPayload]]), bucketed by chunk md5, paired within
+    * buckets, and kept when they share ≥ `minShared` distinct chunk
+    * hashes. Same 100 TB discipline as every candidate generator here
+    * (the shared [[Dedup.bucketPairs]]): buckets capped deterministically
+    * (lowest `maxBucket` ids per hash — a popular boilerplate chunk can't
+    * go quadratic; `maxBucket <= 0` disables the cap), ONE shuffle on the
+    * chunk hash, pairs only ever within buckets. Catches re-encoded
+    * uploads / shared prefixes; window alignment means only
+    * stride-aligned matches count (content-defined chunking is the
+    * production upgrade for arbitrary-offset matches).
+    * Output: (a, b, n_shared).
+    */
   def payloadNearDupPairs(df: DataFrame, window: Int = 64,
       stride: Int = 48, minShared: Int = 2, maxBucket: Int = 200,
       payloadCol: String = "payload", idCol: String = "doc_id"): DataFrame = {
     require(minShared > 0, "minShared must be positive")
     val ch = chunkPayload(df, window, stride, payloadCol, idCol)
       .select(col(idCol).as("id"), col("chunk_md5")).distinct()
-    val w = Window.partitionBy(col("chunk_md5")).orderBy(col("id"))
-    val capped = ch.withColumn("__bp", row_number().over(w))
-      .filter(col("__bp") <= maxBucket).drop("__bp")
-    capped.select(col("id").as("a"), col("chunk_md5"))
-      .join(capped.select(col("id").as("b"), col("chunk_md5")),
-        Seq("chunk_md5"))
-      .filter(col("a") < col("b"))
+    Dedup.bucketPairs(ch, "id", Seq("chunk_md5"), Nil, maxBucket)
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)

@@ -147,13 +147,12 @@ private[graft] object Shared {
     * correct trade on a single driver.
     */
   private[graft] def memo(s: SparkSession, dir: String, key: String)
-      (build: String => DataFrame): DataFrame = {
-    val app = ensureCleanup(s)
-    val k = (app, dir, key)
+      (build: => DataFrame): DataFrame = {
+    val k = (ensureCleanup(s), dir, key)
     val hit = cache.get(k)
     if (hit != null) hit
     else {
-      val df = build(app)
+      val df = build
       val prev = cache.putIfAbsent(k, df)
       if (prev != null) prev else df
     }
@@ -202,10 +201,10 @@ private[graft] object Shared {
     * g19's oracle certifies it against DuckDB).
     */
   def pairs(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "minhash-pairs") { app =>
-      val path = Files.createTempDirectory("graft-pair-index")
-      trackTempDir(app, path)
-      Dedup.writePairIndex(Tables.load(s, dir, "documents"), path.toString)
+    memo(s, dir, "minhash-pairs") {
+      val path = memoDir(s, dir, "pair-index") { p =>
+        Dedup.writePairIndex(Tables.load(s, dir, "documents"), p.toString)
+      }
       Dedup.pairsFromIndex(s, path.toString)
     }
 
@@ -217,7 +216,7 @@ private[graft] object Shared {
     * model artifact, which is exactly this shape.
     */
   def bpeMerges(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "bpe-merges") { _ =>
+    memo(s, dir, "bpe-merges") {
       graft.operators.TextAnalysis.bpeTrain(
         Tables.load(s, dir, "documents"), nMerges = BpeMergeCount)
         .localCheckpoint()
@@ -245,7 +244,7 @@ private[graft] object Shared {
     * universe.
     */
   def orderGraphEdges(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "order-graph-edges") { _ =>
+    memo(s, dir, "order-graph-edges") {
       val cs = Tables.load(s, dir, "orders")
         .join(Tables.load(s, dir, "lineitem"),
           col("l_orderkey") === col("o_orderkey"))
@@ -277,7 +276,7 @@ private[graft] object Shared {
     * (~5 s each at sf0.1, the suite's three most expensive queries).
     */
   def khop3(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "khop3") { _ =>
+    memo(s, dir, "khop3") {
       // the BITSET form of the exact BFS (identical output, certified by
       // Round15Spec + the g07/g08/g18 oracles): per-seed reach sets ride
       // as mask columns, so no hop materializes (seed, node) pair rows —

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Fuzzy, Multimodal}
 
 class DedupSpec extends SparkSpec {
 
@@ -178,6 +178,54 @@ class DedupSpec extends SparkSpec {
     val ivfM = metrics(Dedup.embeddingNearDupPairsIvf(emb, maxBucket = 2),
       "emb_ivf_cells_cap")
     assert(ivfM._1 > 0 && ivfM._2 > 0, s"ivf $ivfM")
+
+    // The payload generators on the same cluster: three copies of the
+    // text make a payload of several distinct 64-byte chunks, so every
+    // kept pair shares >= 2 of them (m06) and has hamming 0 (m07).
+    val media = boiler.select(col("doc_id"),
+      encode(concat_ws(" ", col("text"), col("text"), col("text")), "UTF-8")
+        .as("payload"))
+    assert(Multimodal.chunkPayload(media).select("chunk_md5").distinct()
+      .count() >= 2)
+    assert(Multimodal.payloadNearDupPairs(media, maxBucket = 10).count()
+      === 45L)
+    assert(Multimodal.payloadSimhashPairs(media, maxBucket = 10).count()
+      === 45L)
+    assert(metrics(Multimodal.payloadSimhashPairs(media, maxBucket = 10),
+      "payload_simhash_cap") === ((1960L, 4L)))
+  }
+
+  test("every candidate generator reads a cap <= 0 as no cap") {
+    // Int.MaxValue caps no bucket of the fixture, so cap 0 must give the
+    // same non-empty pairs, generator by generator. Exact copies of a few
+    // documents give every text and payload generator pairs to find.
+    val emb = Tables.load(spark, sf, "embeddings")
+    val media = docs.unionByName(docs.filter(col("doc_id") < 5)
+        .withColumn("doc_id", col("doc_id") + 1000000L))
+      .withColumn("payload", encode(col("text"), "UTF-8"))
+    val part = Tables.load(spark, sf, "part")
+    val generators: Seq[(String, Int => org.apache.spark.sql.DataFrame)] =
+      Seq(
+        "minhashPairs" -> (c => Dedup.minhashPairs(media, maxBucket = c)),
+        "simhashPairs" -> (c => Dedup.simhashPairs(media, maxBucket = c)),
+        "ngramJaccardPairs" ->
+          (c => Dedup.ngramJaccardPairs(media, maxBucket = c)),
+        "embeddingNearDupPairsLsh" ->
+          (c => Dedup.embeddingNearDupPairsLsh(emb, maxBucket = c)),
+        "embeddingNearDupPairsIvf" ->
+          (c => Dedup.embeddingNearDupPairsIvf(emb, maxBucket = c)),
+        "payloadSimhashPairs" ->
+          (c => Multimodal.payloadSimhashPairs(media, maxBucket = c)),
+        "payloadNearDupPairs" ->
+          (c => Multimodal.payloadNearDupPairs(media, maxBucket = c)),
+        "fuzzyNamePairs" ->
+          (c => Fuzzy.fuzzyNamePairs(part, "p_name", maxBlock = c)))
+    generators.foreach { case (name, gen) =>
+      def rows(cap: Int) = gen(cap).collect().map(_.toString).sorted.toSeq
+      val off = rows(0)
+      assert(off.nonEmpty, s"$name found no pairs")
+      assert(off === rows(Int.MaxValue), name)
+    }
   }
 
   test("duplicated spans: partial, internal, adjacent-fused, keep-first") {

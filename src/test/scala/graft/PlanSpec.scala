@@ -159,7 +159,8 @@ class PlanSpec extends SparkSpec {
 
   test("dedup candidate generation never degrades to a cartesian product") {
     Seq("d02_minhash_pairs", "d03_simhash_pairs", "d04_ngram_jaccard",
-      "d10_embedding_neardup_lsh").foreach { q =>
+      "d10_embedding_neardup_lsh", "d11_embedding_neardup_ivf",
+      "m06_payload_neardup", "m07_payload_simhash").foreach { q =>
       assert(!plan(q).contains("CartesianProduct"), q)
     }
   }
