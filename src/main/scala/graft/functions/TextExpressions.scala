@@ -3,11 +3,14 @@ package graft.functions
 import java.security.MessageDigest
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow,
+  UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType,
+  StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-row text-sketch kernels, shared by the interpreted `eval` path and
@@ -214,6 +217,94 @@ object TextKernels {
     while (i < out.length) { out(i) = ends.get(i); i += 1 }
     new GenericArrayData(out)
   }
+
+  private val HEX_LOWER = "0123456789abcdef".toCharArray
+
+  /** Greedy-left BPE encoding of one text: (n_words, n_tokens,
+    * token_md5). `merges` holds the (left, right) symbols of each merge
+    * in rank order, flattened: left at 2i, right at 2i + 1.
+    *
+    * Words are the non-empty pieces of a `\s+` split (limit -1) that
+    * contain no U+0001. A word starts as one symbol per code point, and
+    * symbol i spans `[ends(i - 1), ends(i))` of it (`ends(-1)` = 0), so a
+    * merge only moves boundaries. token_md5 is the lowercase md5 hex of
+    * every word's tokens joined by single spaces, in text order.
+    */
+  def bpeEncode(text: UTF8String, merges: Array[String]): InternalRow = {
+    val words = ws.split(text.toString, -1)
+    val joined = new java.lang.StringBuilder(text.numBytes + 16)
+    var ends = new Array[Int](16)
+    var nWords = 0
+    var nTokens = 0
+    var w = 0
+    while (w < words.length) {
+      val word = words(w)
+      if (!word.isEmpty && word.indexOf('\u0001') < 0) {
+        if (ends.length < word.length) ends = new Array[Int](word.length)
+        var n = 0
+        var i = 0
+        while (i < word.length) {
+          i += Character.charCount(word.codePointAt(i))
+          ends(n) = i
+          n += 1
+        }
+        var m = 0
+        while (m < merges.length) {
+          n = bpeMerge(word, ends, n, merges(m), merges(m + 1))
+          m += 2
+        }
+        var start = 0
+        i = 0
+        while (i < n) {
+          if (nTokens + i > 0) joined.append(' ')
+          joined.append(word, start, ends(i))
+          start = ends(i)
+          i += 1
+        }
+        nWords += 1
+        nTokens += n
+      }
+      w += 1
+    }
+    val md = digest.get()
+    md.reset()
+    val d = md.digest(joined.toString.getBytes("UTF-8"))
+    val hex = new Array[Char](32)
+    var j = 0
+    while (j < 16) {
+      hex(2 * j) = HEX_LOWER((d(j) >> 4) & 0xF)
+      hex(2 * j + 1) = HEX_LOWER(d(j) & 0xF)
+      j += 1
+    }
+    new GenericInternalRow(Array[Any](nWords, nTokens,
+      UTF8String.fromString(new String(hex))))
+  }
+
+  /** One merge over a word's `n` symbols: every adjacent (a, b) pair,
+    * left to right without overlap, becomes one symbol. Rewrites `ends`
+    * in place and returns the new symbol count. */
+  private def bpeMerge(word: String, ends: Array[Int], n: Int, a: String,
+      b: String): Int = {
+    var out = 0
+    var start = 0
+    var i = 0
+    while (i < n) {
+      val mid = ends(i)
+      if (i + 1 < n && mid - start == a.length &&
+          ends(i + 1) - mid == b.length &&
+          word.regionMatches(start, a, 0, a.length) &&
+          word.regionMatches(mid, b, 0, b.length)) {
+        ends(out) = ends(i + 1)
+        i += 2
+      } else {
+        ends(out) = mid
+        i += 1
+      }
+      start = ends(out)
+      out += 1
+    }
+    out
+  }
 }
 
 /** Native MinHash signature: tokenize → w-word shingles → md5 → k linear
@@ -413,6 +504,46 @@ case class CdcBoundaryEnds(child: Expression, window: Int, modulus: Int)
     copy(child = c)
 }
 
+/** Native greedy-left BPE encoder: per text, the struct (n_words INT,
+  * n_tokens INT, token_md5 STRING) of [[TextKernels.bpeEncode]]; NULL
+  * text gives a NULL struct.
+  *
+  * Same promotion rationale as [[MinhashSignature]]: the declarative
+  * encoder (per-character `transform`, a `replace` chain per merge and a
+  * `flatten` of re-split tokens) evaluated its lambdas through the
+  * interpreter per word. The merge list is a constructor argument, not a
+  * literal in the generated source: `doGenCode` passes it as a
+  * reference object, so the source, and the compiled class, are the same
+  * whatever the trained merges are.
+  */
+case class BpeEncode(child: Expression, merges: Seq[(String, String)])
+    extends UnaryExpression {
+  require(merges.forall { case (a, b) =>
+    a.nonEmpty && b.nonEmpty && !a.contains('\u0001') && !b.contains('\u0001') },
+    "merge symbols must be non-empty and U+0001-free")
+
+  @transient private lazy val flat: Array[String] =
+    merges.flatMap { case (a, b) => Seq(a, b) }.toArray
+
+  override def dataType: DataType = StructType(Seq(
+    StructField("n_words", IntegerType, nullable = false),
+    StructField("n_tokens", IntegerType, nullable = false),
+    StructField("token_md5", StringType, nullable = false)))
+  override def prettyName: String = "bpe_encode"
+
+  override def nullSafeEval(input: Any): Any =
+    TextKernels.bpeEncode(input.asInstanceOf[UTF8String], flat)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val m = ctx.addReferenceObj("bpeMerges", flat, "java.lang.String[]")
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.TextKernels.bpeEncode($c, $m)")
+  }
+
+  override protected def withNewChildInternal(c: Expression): BpeEncode =
+    copy(child = c)
+}
+
 object TextFunctions {
   /** MinHash signature column: array<long> of length k. */
   def minhash_signature(text: Column, k: Int = 16, w: Int = 3): Column =
@@ -452,4 +583,9 @@ object TextFunctions {
   def cdc_boundary_ends(text: Column, window: Int, modulus: Int): Column =
     Bridge.toColumn(
       CdcBoundaryEnds(Bridge.toExpression(text), window, modulus))
+
+  /** BPE encoding column: struct (n_words, n_tokens, token_md5) of the
+    * text under `merges`, (left, right) pairs in rank order. */
+  def bpe_encode(text: Column, merges: Seq[(String, String)]): Column =
+    Bridge.toColumn(BpeEncode(Bridge.toExpression(text), merges))
 }

@@ -573,19 +573,18 @@ object TextAnalysis {
   }
 
   /** Greedy-left BPE ENCODING with a trained merge list (the apply side
-    * of [[bpeTrain]]): per word, char-split into the boundary-marked
-    * symbol string, apply every merge in rank order with the same
-    * \1a\1\1b\1 → \1ab\1 whole-symbol replace, then read the tokens off
-    * the separators. Output per doc: (doc_id, n_words, n_tokens,
-    * token_md5) where token_md5 digests the space-joined token stream in
-    * document order.
+    * of [[bpeTrain]]): per word, split into code points, apply every merge
+    * in rank order left to right without overlap (bpeTrain's whole-symbol
+    * replace), and read off the tokens. Output per doc: (doc_id, n_words,
+    * n_tokens, token_md5) where token_md5 digests the space-joined token
+    * stream in document order.
     *
     * Scale: entirely MAP-ONLY — the merge list is model output (a few
-    * hundred rows at most), folded into the projection as literals, so
+    * hundred rows at most), handed to the native `BpeEncode` kernel, so
     * encoding 100 TB is one embarrassingly-parallel scan with zero
     * shuffles and zero joins. The alternative (encode the distinct
     * vocabulary once, join back) would shuffle the entire exploded
-    * corpus by word to save re-running a few cheap string replaces per
+    * corpus by word to save re-running a few cheap merges per
     * occurrence — a bad trade at any scale.
     *
     * Empty words (leading/trailing whitespace splits) and words
@@ -593,33 +592,12 @@ object TextAnalysis {
     * [[bpeTrain]]'s vocabulary filter.
     */
   def bpeEncode(docs: DataFrame, merges: Seq[(String, String)],
-      textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    val sep = "\u0001"
-    require(merges.forall { case (a, b) =>
-      a.nonEmpty && b.nonEmpty && !a.contains(sep) && !b.contains(sep) },
-      "merge symbols must be non-empty and U+0001-free")
-    val ws = filter(split(col(textCol), "\\s+"),
-      w => length(w) > lit(0) && !w.contains(sep))
-    // word → space-joined token string: build the marked symbol string,
-    // fold the merges, then turn separators into spaces.
-    val tokStr: Column => Column = w => {
-      val base = concat(lit(sep), array_join(transform(
-        sequence(lit(1), length(w)), i => w.substr(i, lit(1))), sep + sep),
-        lit(sep))
-      val merged = merges.foldLeft(base) { case (s, (a, b)) =>
-        call_function("replace", s,
-          lit(sep + a + sep + sep + b + sep), lit(sep + a + b + sep))
-      }
-      call_function("replace",
-        call_function("replace", merged, lit(sep + sep), lit(" ")),
-        lit(sep), lit(""))
-    }
-    // Tokens never contain spaces (words are whitespace-split), so the
-    // per-word token strings flatten losslessly on ' '.
-    val toks = flatten(transform(ws, w => split(tokStr(w), " ")))
-    docs.select(col(idCol), size(ws).as("n_words"), size(toks).as("n_tokens"),
-      md5(array_join(toks, " ")).as("token_md5"))
-  }
+      textCol: String = "text", idCol: String = "doc_id"): DataFrame =
+    docs.select(col(idCol),
+        graft.functions.TextFunctions.bpe_encode(col(textCol), merges)
+          .as("bpe"))
+      .select(col(idCol), col("bpe.n_words"), col("bpe.n_tokens"),
+        col("bpe.token_md5"))
 
   /** Bigram language-model scoring (the KenLM/CCNet quality signal): a
     * word-bigram LM with add-one smoothing is trained on `train` and every

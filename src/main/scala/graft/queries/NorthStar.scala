@@ -1019,11 +1019,12 @@ object NorthStar {
     },
 
     // BPE encoding with the merges trained by t13: the tiny merge table is
-    // model output (driver-side by design, like the k-means centroid
-    // collect), then the corpus encode is one map-only scan.
+    // model output, collected once per session (like the k-means centroid
+    // collect), then the corpus encode is one map-only scan through the
+    // native kernel.
     "t14_bpe_encode" -> { (s, dir) =>
       val d = docs(s, dir)
-      val merges = Shared.bpeMergePairs(Shared.bpeMerges(s, dir))
+      val merges = Shared.bpeMergeList(s, dir)
       TextAnalysis.bpeEncode(d, merges).orderBy(col("doc_id"))
     },
 
@@ -1034,7 +1035,7 @@ object NorthStar {
     // aggregation of exact integer counts.
     "t40_fertility" -> { (s, dir) =>
       val d = docs(s, dir)
-      val merges = Shared.bpeMergePairs(Shared.bpeMerges(s, dir))
+      val merges = Shared.bpeMergeList(s, dir)
       TextAnalysis.bpeEncode(d, merges)
         .join(d.select(col("doc_id"), col("lang")), "doc_id")
         .groupBy(col("lang"))

@@ -2,19 +2,26 @@ package graft
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 
-import graft.functions.{ArrayDotProduct, ArraySquaredDistance, MinhashSignature}
+import graft.functions.{ArrayDotProduct, ArraySquaredDistance, BpeEncode,
+  MinhashSignature}
 import graft.operators.Multimodal
 import graft.sources.{KafkaSource, SaslConfig}
 
 /** ScalaCheck properties over the engine's pure-logic surface (SURVEY.md
-  * §5.2): expression semantics evaluated directly (no session needed) and
-  * validation behavior, against independent reference implementations.
+  * §5.2): expression semantics evaluated directly and validation
+  * behavior, against independent reference implementations. Only the BPE
+  * property needs a session, for its declarative reference encoder.
   */
 object GraftProperties extends Properties("graft") {
 
@@ -93,6 +100,103 @@ object GraftProperties extends Properties("graft") {
       .nullSafeEval(UTF8String.fromString(t))
       .asInstanceOf[GenericArrayData].array.toSeq.map(_.toString)
     got == ref
+  }
+
+  // ---- BpeEncode vs the declarative encoder it replaced ------------------
+
+  /** The higher-order-function BPE encoder that the native kernel
+    * replaced, kept as its reference: per word, the boundary-marked symbol
+    * string (\1a\1\1b\1...), one whole-symbol `replace` per merge in rank
+    * order, then the tokens read off the separators. Output per doc:
+    * (doc_id, n_words, n_tokens, token_md5). */
+  private def hofBpeEncode(docs: DataFrame, merges: Seq[(String, String)])
+      : DataFrame = {
+    val sep = "\u0001"
+    val ws = filter(split(col("text"), "\\s+"),
+      w => length(w) > lit(0) && !w.contains(sep))
+    val tokStr: Column => Column = w => {
+      val base = concat(lit(sep), array_join(transform(
+        sequence(lit(1), length(w)), i => w.substr(i, lit(1))), sep + sep),
+        lit(sep))
+      val merged = merges.foldLeft(base) { case (s, (a, b)) =>
+        call_function("replace", s,
+          lit(sep + a + sep + sep + b + sep), lit(sep + a + b + sep))
+      }
+      call_function("replace",
+        call_function("replace", merged, lit(sep + sep), lit(" ")),
+        lit(sep), lit(""))
+    }
+    val toks = flatten(transform(ws, w => split(tokStr(w), " ")))
+    docs.select(col("doc_id"), size(ws).as("n_words"),
+      size(toks).as("n_tokens"), md5(array_join(toks, " ")).as("token_md5"))
+  }
+
+  private lazy val spark = GraftSession.create("graft-test", "4")
+
+  /** Base symbols: two supplementary code points among them. */
+  private val bpeSymbols = Seq("a", "b", "c", "😀", "𝔸")
+
+  private val bpeWord = Gen.frequency(
+    6 -> Gen.choose(1, 6).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf(bpeSymbols)).map(_.mkString)),
+    1 -> Gen.oneOf("aaaa", "aaaaa", "abab"),
+    1 -> Gen.oneOf("a\u0001b", "\u0001", "ab\u0001"))
+
+  private val bpeSpace = Gen.choose(1, 3).flatMap(n =>
+    Gen.listOfN(n, Gen.oneOf(" ", "\t", "\n")).map(_.mkString))
+
+  /** Words between whitespace runs, with or without leading and trailing
+    * runs; also "", whitespace only and NULL. */
+  private val bpeText: Gen[Option[String]] = Gen.frequency(
+    1 -> Gen.const(None),
+    1 -> Gen.const(Some("")),
+    1 -> bpeSpace.map(Some(_)),
+    8 -> (for {
+      words <- Gen.choose(1, 8).flatMap(Gen.listOfN(_, bpeWord))
+      seps <- Gen.listOfN(words.size + 1, bpeSpace)
+      lead <- Gen.oneOf(true, false)
+      trail <- Gen.oneOf(true, false)
+    } yield Some((if (lead) seps.head else "") +
+      words.zip(seps.tail).map { case (w, sp) => w + sp }.mkString
+        .dropRight(if (trail) 0 else seps.last.length))))
+
+  /** Merges over the base symbols and the outputs of earlier merges, so a
+    * merge can feed a later one; (a, a) pairs come up often. */
+  private val bpeMergeList: Gen[Seq[(String, String)]] =
+    Gen.choose(0, 5).flatMap(n =>
+      (0 until n).foldLeft(Gen.const(Seq.empty[(String, String)])) {
+        (acc, _) => acc.flatMap { ms =>
+          val vocab = bpeSymbols ++ ms.map { case (a, b) => a + b }
+          for {
+            a <- Gen.oneOf(vocab)
+            b <- Gen.frequency(3 -> Gen.oneOf(vocab), 1 -> Gen.const(a))
+          } yield ms :+ ((a, b))
+        }
+      })
+
+  property("BpeEncode == the higher-order-function encoder, eval and " +
+      "codegen") = forAll(Gen.listOf(bpeText), bpeMergeList) {
+    (texts, merges) =>
+      val s = spark
+      import s.implicits._
+      val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text")
+      val ref = hofBpeEncode(docs, merges).collect().sortBy(_.getLong(0))
+        .map(r => (Option(r.get(1)), Option(r.get(2)), Option(r.getString(3))))
+        .toSeq
+      def fields(r: InternalRow) =
+        if (r == null) (None, None, None)
+        else (Some(r.getInt(0)), Some(r.getInt(1)),
+          Some(r.getUTF8String(2).toString))
+      val e = BpeEncode(BoundReference(0, StringType, nullable = true), merges)
+      val generated = GenerateUnsafeProjection.generate(Seq(e))
+      val rows = texts.map(t => InternalRow(t.map(UTF8String.fromString).orNull))
+      val evaluated = rows.map(r => fields(e.eval(r).asInstanceOf[InternalRow]))
+      val compiled = rows.map { r =>
+        val out = generated(r)
+        fields(if (out.isNullAt(0)) null else out.getStruct(0, 3))
+      }
+      evaluated == ref && compiled == ref
   }
 
   // ---- vector expressions vs plain scala folds ---------------------------

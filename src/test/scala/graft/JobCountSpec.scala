@@ -26,9 +26,10 @@ import org.apache.spark.sql.functions._
 class JobCountSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** Jobs the khop3 build starts at sf0.001 (the seed collect and the
-    * per-hop cuts), as counted before the bitset kernel lost its
-    * `edgesDeduped`/`checkpoint` knobs: its plan must not change. */
-  private val KHop3BuildJobs = 20
+    * per-hop cuts) over order-graph edges sized from their stored blocks,
+    * a few KB read in one partition (20 while they carried their origin
+    * plan's estimate): its plan must not change otherwise. */
+  private val KHop3BuildJobs = 15
 
   /** Every job started while `body` runs, read by a listener after the
     * listener bus has delivered all of them. */
@@ -91,6 +92,16 @@ class JobCountSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(collectFirst(df.queryExecution.executedPlan) {
       case e @ ShuffleExchangeExec(_: RangePartitioning, _, _, _) => e
     }.isEmpty)
+  }
+
+  test("building t14 or t40 starts no job once the session has built one") {
+    Seq("t14_bpe_encode", "t40_fertility").foreach(SparkEntry.queries(_)(
+      spark, sf))
+    Seq("t14_bpe_encode", "t40_fertility").foreach { q =>
+      val jobs = jobsDuring(SparkEntry.queries(q)(spark, sf))
+      assert(jobs.isEmpty, s"jobs ${jobs.map(_.jobId)} started while " +
+        s"building $q: its merge list is collected once per session")
+    }
   }
 
   test("a sort whose input estimate is above the floor keeps " +

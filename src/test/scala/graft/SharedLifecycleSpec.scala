@@ -2,19 +2,17 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.queries.Shared
 
 /** Shared-artifact lifecycle (VERDICT r8 item 5 / ADVICE r8): stopping a
   * session must delete the pair-index temp dirs its Shared builds created
-  * (and evict its memo entries — same listener). Runs as its own suite
+  * and evict its memo entries (same listener). Runs as its own suite
   * with a dedicated stop/recreate cycle; suites execute sequentially in
   * the forked test JVM, so no other suite is mid-flight when the context
   * stops, and the next suite's GraftSession.create simply builds a fresh
   * context (getOrCreate discards a stopped default session).
   */
-class SharedLifecycleSpec extends AnyFunSuite {
+class SharedLifecycleSpec extends SparkSpec {
 
   private def listPairDirs(): Set[Path] = {
     val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
@@ -47,6 +45,24 @@ class SharedLifecycleSpec extends AnyFunSuite {
       Thread.sleep(100)
     assert(created.forall(p => !Files.exists(p)),
       s"pair-index dirs survived session stop: $created")
+    Shared.deleteTree(corpus)
+  }
+
+  test("stopping the session evicts its memo entries, the BPE merge list " +
+      "with the tables and artifacts") {
+    val s = GraftSession.create("graft-lifecycle-test", "4")
+    val corpus = Files.createTempDirectory("graft-lifecycle-corpus")
+    Files.copy(Paths.get(sf, "documents.parquet"),
+      corpus.resolve("documents.parquet"))
+    assert(Shared.bpeMergeList(s, corpus.toString).nonEmpty)
+    assert(Shared.memoKeys(corpus.toString) ===
+      Set("table:documents", "bpe-merges", "bpe-merge-list"))
+    s.stop()
+    val deadline = System.nanoTime() + 10_000_000_000L
+    while (Shared.memoKeys(corpus.toString).nonEmpty &&
+        System.nanoTime() < deadline)
+      Thread.sleep(100)
+    assert(Shared.memoKeys(corpus.toString).isEmpty)
     Shared.deleteTree(corpus)
   }
 }

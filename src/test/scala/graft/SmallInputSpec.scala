@@ -18,6 +18,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
   BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec}
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.internal.SQLConf
 
 /** A query over inputs below AQE's coalescing floor runs as one stage:
@@ -105,11 +106,13 @@ class SmallInputSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     try {
       Tables.names.foreach(t => Files.copy(Paths.get(sf, s"$t.parquet"),
         dir.resolve(s"$t.parquet")))
-      // g18 reads localCheckpointed artifacts whose estimates are their
-      // origin plans', above the floor
+      // the Shared artifacts that g07, g18 and t40 read are sized from
+      // what their checkpoints stored, a few KB here, so their scans are
+      // small inputs too
       val pinned = Seq("d02_minhash_pairs" -> 1, "s01_knn_brute" -> 1,
         "t14_bpe_encode" -> 1, "m06_payload_neardup" -> 1,
-        "g18_reach_summary" -> 6, "g19_pair_index" -> 1)
+        "g18_reach_summary" -> 1, "g19_pair_index" -> 1,
+        "g07_khop" -> 1, "t40_fertility" -> 1)
       val got = pinned.map { case (q, _) =>
         val build = SparkEntry.queries(q)
         build(spark, dir.toString).collect() // builds the artifacts
@@ -118,6 +121,34 @@ class SmallInputSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       }
       assert(got === pinned)
     } finally graft.queries.Shared.deleteTree(dir)
+  }
+
+  test("a checkpoint that did not store every partition keeps its origin " +
+      "estimate, and its scan its partitions") {
+    // a filter is estimated at its input's 8 MB, above the floor, while
+    // the checkpoint stores 100 rows
+    def cut(eager: Boolean) = spark.range(0, 1000000, 1, 4).toDF()
+      .filter(col("id") < 100).localCheckpoint(eager)
+    def estimate(df: DataFrame) = df.queryExecution.optimizedPlan.stats
+      .sizeInBytes
+    val floor = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get(floorKey))
+    def wrapped(df: DataFrame) = df.groupBy(col("id") % 7).count()
+      .queryExecution.optimizedPlan.exists {
+        case Repartition(1, false, _) => true
+        case _ => false
+      }
+    val stored = Bridge.sizedFromStoredBlocks(cut(eager = true))
+    assert(estimate(stored) < floor && wrapped(stored))
+    // a lazy cut stores no block until a job runs it (and then all: the
+    // checkpoint computes the partitions the job left out)
+    val lazyCut = cut(eager = false)
+    val origin = estimate(lazyCut)
+    assert(origin > floor)
+    val unsized = Bridge.sizedFromStoredBlocks(lazyCut)
+    assert(unsized eq lazyCut)
+    assert(estimate(unsized) === origin && !wrapped(unsized))
+    assert(sorted(unsized) === sorted(stored))
   }
 
   test("results equal the plans a large input gets") {
